@@ -25,7 +25,7 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 
-def _steal_jiffies() -> int:
+def _steal_jiffies() -> int | None:
     """Cumulative hypervisor steal time (jiffies) from /proc/stat.
 
     loadavg cannot see a noisy *neighbor* VM: this host shows bursts of
@@ -33,13 +33,13 @@ def _steal_jiffies() -> int:
     normal. Recording the per-trial steal delta lets a slow trial
     adjudicate itself (big steal → contended window, not a regression).
     Diagnostics-only: goes to the stderr/sidecar detail, never the
-    stdout contract line."""
+    stdout contract line. None when /proc/stat cannot be read."""
     try:
         with open("/proc/stat") as fh:
             parts = fh.readline().split()
         return int(parts[8])  # cpu  user nice sys idle iowait irq sirq steal
     except (OSError, IndexError, ValueError):
-        return -1
+        return None
 
 
 def main() -> None:
@@ -88,7 +88,7 @@ def main() -> None:
         samples: list[float] = []
         loads: list[float] = []
         jobs: list[int] = []
-        steals: list[int] = []
+        steals: list[int | None] = []
         # one untimed warmup first: the initial run pays JVM JIT +
         # whole-stage-codegen compilation (r3 spreads showed trial-1
         # dominating, e.g. q1 4.8s vs 1.29s min); warming keeps the
@@ -105,7 +105,8 @@ def main() -> None:
             df = q.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
-            steals.append(_steal_jiffies() - st0)
+            st1 = _steal_jiffies()
+            steals.append(None if st0 is None or st1 is None else st1 - st0)
             sc.setLocalProperty("spark.jobGroup.id", None)
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(tag)))
             if trial > 0:

@@ -21,6 +21,11 @@ work is delegated to downstream engines (reference
 
 __version__ = "0.1.0"
 
+# Every worker that unpickles a kernel, DataSource or writer of this package
+# runs this __init__ first: the zipimport guard patches the worker process
+# there (and never the driver; see _worker_env).
+from oxbow_spark import _worker_env  # noqa: E402,F401
+
 # py-oxbow-compatible public surface (reference
 # `py-oxbow/oxbow/__init__.py:49-77`): twelve lazy `from_*` constructors and
 # twelve one-shot Arrow-IPC `read_*` functions, plus the Spark-native

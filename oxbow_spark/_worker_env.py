@@ -19,14 +19,22 @@ still happens whenever the archive's mtime or size changes (the semantics
 is merely skipped when the archive is provably unchanged. ``st_mtime_ns``
 narrows the stale window to filesystem timestamp granularity.
 
-Application scope (ADVICE r15): the patch is process-global, so it is NOT
-applied by merely importing this module on the driver. It applies itself
-only inside PySpark worker/daemon processes (detected via ``pyspark.worker``
-/ ``pyspark.daemon`` in ``sys.modules``); ``oxbow_spark.worker_daemon``
-additionally calls it explicitly at daemon boot so every forked worker
-inherits it. The Arrow-kernel operator modules import this module, so a
-foreign session (no custom daemon) that unpickles one of our kernels still
-patches its workers before their second task. Idempotent; no-op on >= 3.12.
+Application scope: the patch is process-global, so it is NOT applied by
+merely importing this module on the driver. It applies itself only inside
+processes that PySpark forks to run Python for the JVM (see
+``_in_pyspark_worker_process``). The package ``__init__`` imports this
+module, so every worker that unpickles anything from ``oxbow_spark`` — an
+Arrow kernel in a UDF worker, a ``sources.*`` DataSource or writer in a
+planner or commit worker — patches itself before its next task. Those
+planner/commit workers (``pyspark.sql.worker.create_data_source``,
+``plan_data_source_read``, ``data_source_pushdown_filters``,
+``write_into_data_source``, ``commit_data_source_write``) are forked by the
+stock ``pyspark.daemon`` whatever ``spark.python.daemon.module`` says, and
+each call pays the same ``setup_spark_files`` re-parse: ~200 ms in
+``load()`` and again when the action plans its read. Workers are reused,
+so only a worker's first call still pays. ``oxbow_spark.worker_daemon``
+additionally applies the patch at UDF-daemon boot so every forked UDF
+worker inherits it. Idempotent; no-op on >= 3.12.
 
 This module must stay import-light (stdlib only): the worker daemon loads
 it by file path before anything else, including on interpreters where the
@@ -69,12 +77,20 @@ def patch_zipimport_invalidate_caches() -> None:
 
 
 def _in_pyspark_worker_process() -> bool:
-    """True in PySpark worker/daemon processes, False on the driver.
+    """True in the Python processes PySpark forks, False on the driver.
 
-    Workers always have ``pyspark.worker`` imported by the time user code
-    (a kernel unpickle) runs; the driver's SQL/py4j path never imports it.
+    UDF workers import ``pyspark.worker``. Planner and commit workers run
+    a ``pyspark.sql.worker.*`` module under a daemon that is ``__main__``,
+    and import neither ``pyspark.worker`` nor ``pyspark.daemon``; like
+    every worker entry point they import ``pyspark.worker_util``. By the
+    time user code (a kernel or DataSource unpickle) runs, the worker has
+    imported its entry module. The driver's SQL/py4j path imports none of
+    these.
     """
-    return "pyspark.worker" in sys.modules or "pyspark.daemon" in sys.modules
+    mods = sys.modules
+    return ("pyspark.worker" in mods or "pyspark.daemon" in mods
+            or "pyspark.worker_util" in mods
+            or any(m.startswith("pyspark.sql.worker.") for m in mods))
 
 
 if _in_pyspark_worker_process():

@@ -164,9 +164,9 @@ class OxbowFile:
     def to_spark(self, spark):
         """Distributed DataFrame over the same scan: index-driven
         partitions, projection pushdown, filter→region pushdown."""
-        from oxbow_spark.sources.register import DATASOURCES
+        from oxbow_spark.sources.register import register
 
-        spark.dataSource.register(DATASOURCES[self._format])
+        register(spark, self._format)
         r = spark.read.format(self._format)
         for k, v in self.options.items():
             r = r.option(k, v)

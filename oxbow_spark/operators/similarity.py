@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from oxbow_spark import config
-from oxbow_spark import _worker_env  # noqa: F401  (worker-side zipimport fix)
 
 ACC = "decimal(38,12)"
 

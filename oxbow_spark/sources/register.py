@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import SparkSession
 
 
@@ -45,7 +47,22 @@ class _LazyMap(dict):
 
 DATASOURCES = _LazyMap()
 
+#: session → format names registered on it. Spark logs "replaced a
+#: previously registered data source" on every repeat register, and
+#: ``to_spark`` runs once per region query.
+_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
+    weakref.WeakKeyDictionary())
+
+
+def register(spark: SparkSession, name: str) -> None:
+    """Register the ``name`` format's DataSource on ``spark``, once per
+    session."""
+    done = _REGISTERED.setdefault(spark, set())
+    if name not in done:
+        spark.dataSource.register(DATASOURCES[name])
+        done.add(name)
+
 
 def register_all(spark: SparkSession) -> None:
     for src in DATASOURCES.values():
-        spark.dataSource.register(src)
+        register(spark, src.name())

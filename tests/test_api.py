@@ -178,3 +178,32 @@ def test_missing_path_raises_at_read():
         ox.from_bigwig("/nonexistent/nope.bw").to_arrow()
     with pytest.raises(FileNotFoundError):
         ox.from_fasta("/nonexistent/nope.fa").to_arrow()
+
+
+def test_to_spark_registers_once_per_session(spark, tmp_path, monkeypatch):
+    # Spark logs "replaced a previously registered data source" on every
+    # repeat register, and to_spark runs once per region query
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    import oxbow_spark.sources.register as reg
+
+    sam = tmp_path / "one.sam"
+    sam.write_text("@SQ\tSN:chr1\tLN:1000\n"
+                   "r1\t0\tchr1\t10\t60\t4M\t*\t0\t0\tACGT\tIIII\n")
+    calls = []
+    orig = DataSourceRegistration.register
+
+    def register(self, ds):
+        calls.append(ds.name())
+        return orig(self, ds)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", register)
+    # forget earlier tests' registrations; a fresh spark.newSession() cannot
+    # take a name another session registered (DATA_SOURCE_ALREADY_EXISTS)
+    monkeypatch.setattr(reg, "_REGISTERED", weakref.WeakKeyDictionary(),
+                        raising=False)
+    f = ox.from_sam(str(sam))
+    assert f.to_spark(spark).count() == f.to_spark(spark).count() == 1
+    assert calls == ["sam"]
