@@ -60,10 +60,12 @@ class TagDef:
     def spark_type(self) -> T.DataType:
         return TAG_TYPES[self.code]
 
-    def parse(self, code: str, raw: str):
-        """Parse a SAM text tag value; mismatched types fall back to the
-        raw string when this def is a String sink (reference
-        `alignment/model/tag.rs:230-234,340-386`), else None."""
+    def parse(self, code: str, raw):
+        """Parse a tag value: SAM text (``B`` arrays as ``"C,1,2"``) or
+        one decoded from BAM/CRAM (``BC`` arrays as ``[1, 2]``).
+        Mismatched types fall back to the raw string when this def is a
+        String sink (reference `alignment/model/tag.rs:230-234,340-386`),
+        else None."""
         try:
             if self.code in ("A", "Z", "H"):
                 return raw
@@ -71,10 +73,11 @@ class TagDef:
                 return float(raw)
             if code == "i" and self.code in "cCsSiI":
                 return int(raw)
-            if code == "B" and self.code.startswith("B"):
-                parts = raw.split(",")
-                sub = parts[0]
-                vals = parts[1:]
+            if code.startswith("B") and self.code.startswith("B"):
+                if isinstance(raw, list):
+                    sub, vals = code[1:], raw
+                else:
+                    sub, *vals = raw.split(",")
                 if sub == "f" and self.code == "Bf":
                     return [float(v) for v in vals]
                 if sub != "f" and self.code != "Bf":

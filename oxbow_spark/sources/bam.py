@@ -45,7 +45,6 @@ from oxbow_spark.models.sam_header import (
 from oxbow_spark.sources.base import (
     DEFAULT_BATCH_SIZE,
     GenomicStreamMixin,
-    resolve_paths,
     select_fields,
 )
 from oxbow_spark.sources.bgzf import (
@@ -598,10 +597,7 @@ class BamDataSource(GenomicStreamMixin, DataSource):
 
     def __init__(self, options: dict):
         super().__init__(options)
-        try:
-            self.paths = resolve_paths(options.get("path"))
-        except FileNotFoundError:
-            self.paths = []  # write mode: target needn't exist yet
+        self.paths = self._find_paths()
         self.names = select_fields(STANDARD_FIELD_NAMES, options.get("fields"))
         requested = options.get("coords", self.NATIVE_CS)
         self.coord_offset = _coords.start_offset(self.NATIVE_CS, requested)
@@ -620,7 +616,7 @@ class BamDataSource(GenomicStreamMixin, DataSource):
         return BamWriter(self.options, overwrite)
 
     def header(self) -> SamHeader:
-        with BgzfReader(self.paths[0]) as r:
+        with BgzfReader(self._require_paths()[0]) as r:
             hdr, names, _ = read_bam_header(r)
         return hdr
 
@@ -634,7 +630,7 @@ class BamDataSource(GenomicStreamMixin, DataSource):
         n = int(scan.split(":")[1]) if ":" in scan else 1024
         order: list[str] = []
         codes: dict[str, str] = {}
-        with BgzfReader(self.paths[0]) as r:
+        with BgzfReader(self._require_paths()[0]) as r:
             _, ref_names, _ = read_bam_header(r)
             for _ in range(n):
                 szb = r.read(4)
@@ -657,8 +653,7 @@ class BamDataSource(GenomicStreamMixin, DataSource):
     def reader(self, schema: T.StructType) -> BamReader:
         from oxbow_spark.sources.pushdown import pushdown_enabled
 
-        if not self.paths:
-            raise FileNotFoundError(f"no files match {self.options.get('path')!r}")
+        self._require_paths()
         return PushdownBamReader(self) if pushdown_enabled() else BamReader(self)
 
 

@@ -112,6 +112,25 @@ class GenomicStreamMixin:
 
         return StreamSinkAdapter(self.writer(schema, False))
 
+    def _find_paths(self) -> list[str]:
+        """The files the ``path`` option matches; none when it names a
+        write target that does not exist yet (a read then fails in
+        ``_require_paths``)."""
+        try:
+            return resolve_paths(self.options.get("path"))
+        except FileNotFoundError:
+            return []
+
+    def _require_paths(self) -> list[str]:
+        """The input files, for any read: header, tag or attribute scan,
+        index metadata or the scan itself."""
+        if not self.paths:
+            raise FileNotFoundError(
+                f"no files match {self.options.get('path')!r} (reading "
+                "requires existing input; for writes this path is the "
+                "target directory)")
+        return self.paths
+
 
 class LinePartition(InputPartition):
     def __init__(self, path: str, start: int = -1, end: int = -1, vpos: bool = False):
@@ -435,20 +454,8 @@ class TextFormatSource(GenomicStreamMixin, DataSource):
         self.path = options.get("path")
         if not self.path:
             raise ValueError(f"{self.name()} source requires a path")
-        try:
-            self.paths = resolve_paths(self.path)
-        except FileNotFoundError:
-            # write mode: the target needn't exist yet — schema()/reader()
-            # will re-raise with context if a read is attempted
-            self.paths = []
+        self.paths = self._find_paths()
         self._codec_cache: Codec | None = None
-
-    def _require_paths(self) -> list[str]:
-        if not self.paths:
-            raise FileNotFoundError(
-                f"no files match {self.path!r} (reading requires existing "
-                "input; for writes this path is the target directory)")
-        return self.paths
 
     # -- subclass hooks ----------------------------------------------------
     NATIVE_CS = "11"

@@ -34,7 +34,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from oxbow_spark import coords as _coords
-from oxbow_spark.sources.base import GenomicStreamMixin, resolve_paths, select_fields
+from oxbow_spark.sources.base import GenomicStreamMixin, select_fields
 
 from oxbow_spark.sources import fsio
 
@@ -659,10 +659,7 @@ class _BbiSource(GenomicStreamMixin, DataSource):
 
     def __init__(self, options: dict):
         super().__init__(options)
-        try:
-            self.paths = resolve_paths(options.get("path"))
-        except FileNotFoundError:
-            self.paths = []  # write mode: target needn't exist yet
+        self.paths = self._find_paths()
         self.zoom = int(options["zoom"]) if options.get("zoom") not in (None, "") else -1
         self.kind = "zoom" if self.zoom >= 0 else self.KIND
         self.asql_tags: tuple[str, ...] | None = None
@@ -718,20 +715,19 @@ class _BbiSource(GenomicStreamMixin, DataSource):
     def reader(self, schema):
         from oxbow_spark.sources.pushdown import pushdown_enabled
 
-        if not self.paths:
-            raise FileNotFoundError(f"no files match {self.options.get('path')!r}")
+        self._require_paths()
         return PushdownBbiReader(self) if pushdown_enabled() else BbiReader(self)
 
     # metadata introspection (SURVEY M1/M4)
     def chrom_sizes(self) -> dict[str, int]:
-        bbi = BbiFile(self.paths[0])
+        bbi = BbiFile(self._require_paths()[0])
         try:
             return {nm: sz for nm, sz in bbi.chroms.values()}
         finally:
             bbi.close()
 
     def zoom_levels(self) -> list[int]:
-        bbi = BbiFile(self.paths[0])
+        bbi = BbiFile(self._require_paths()[0])
         try:
             return sorted(z.reduction for z in bbi.zooms)
         finally:

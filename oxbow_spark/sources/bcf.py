@@ -940,7 +940,7 @@ class BcfDataSource(VcfDataSource):
         return BcfWriter(self.options, overwrite)
 
     def header(self) -> VcfHeader:
-        with open_bcf(self.paths[0]) as r:
+        with open_bcf(self._require_paths()[0]) as r:
             hdr, _, _ = read_bcf_header(r)
         return hdr
 

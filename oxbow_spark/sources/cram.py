@@ -51,7 +51,6 @@ from oxbow_spark.models.sam_header import (
 from oxbow_spark.sources.base import (
     DEFAULT_BATCH_SIZE,
     GenomicStreamMixin,
-    resolve_paths,
     select_fields,
 )
 from oxbow_spark.sources.pushdown import region_from_filters
@@ -2283,10 +2282,7 @@ class CramDataSource(GenomicStreamMixin, DataSource):
 
     def __init__(self, options: dict):
         super().__init__(options)
-        try:
-            self.paths = resolve_paths(options.get("path"))
-        except FileNotFoundError:
-            self.paths = []  # write mode: target needn't exist yet
+        self.paths = self._find_paths()
         self.names = select_fields(STANDARD_FIELD_NAMES, options.get("fields"))
         requested = options.get("coords", self.NATIVE_CS)
         self.coord_offset = _coords.start_offset(self.NATIVE_CS, requested)
@@ -2358,6 +2354,5 @@ class CramDataSource(GenomicStreamMixin, DataSource):
     def reader(self, schema: T.StructType) -> CramReader:
         from oxbow_spark.sources.pushdown import pushdown_enabled
 
-        if not self.paths:
-            raise FileNotFoundError(f"no files match {self.options.get('path')!r}")
+        self._require_paths()
         return PushdownCramReader(self) if pushdown_enabled() else CramReader(self)

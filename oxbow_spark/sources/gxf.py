@@ -158,7 +158,7 @@ class _GxfSource(TextFormatSource):
             return None
         n = int(scan.split(":")[1]) if ":" in scan else 1024
         lines: list[str] = []
-        with open_text(self.paths[0]) as f:
+        with open_text(self._require_paths()[0]) as f:
             for line in f:
                 if line.startswith("#"):
                     continue

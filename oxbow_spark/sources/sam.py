@@ -257,7 +257,7 @@ class SamDataSource(TextFormatSource):
 
     def header(self) -> SamHeader:
         lines = []
-        with open_text(self.paths[0]) as f:
+        with open_text(self._require_paths()[0]) as f:
             for line in f:
                 if not line.startswith("@"):
                     break
@@ -275,7 +275,7 @@ class SamDataSource(TextFormatSource):
             return None
         n = int(scan.split(":")[1]) if ":" in scan else 1024
         recs: list[str] = []
-        with open_text(self.paths[0]) as f:
+        with open_text(self._require_paths()[0]) as f:
             for line in f:
                 if line.startswith("@"):
                     continue

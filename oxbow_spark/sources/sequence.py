@@ -30,7 +30,6 @@ from oxbow_spark.sources.base import (
     DEFAULT_BATCH_SIZE,
     GenomicStreamMixin,
     open_text,
-    resolve_paths,
     select_fields,
 )
 from oxbow_spark.sources import fsio
@@ -230,10 +229,7 @@ class FastaDataSource(GenomicStreamMixin, DataSource):
 
     def __init__(self, options):
         super().__init__(options)
-        try:
-            self.paths = resolve_paths(options.get("path"))
-        except FileNotFoundError:
-            self.paths = []  # write mode: target needn't exist yet
+        self.paths = self._find_paths()
         self.names = select_fields(FASTA_FIELDS, options.get("fields"))
 
     def writer(self, schema, overwrite: bool):
@@ -245,8 +241,7 @@ class FastaDataSource(GenomicStreamMixin, DataSource):
         return _struct(self.names)
 
     def reader(self, schema):
-        if not self.paths:
-            raise FileNotFoundError(f"no files match {self.options.get('path')!r}")
+        self._require_paths()
         return FastaReader(
             self.paths,
             self.schema(),
@@ -412,10 +407,7 @@ class FastqDataSource(GenomicStreamMixin, DataSource):
         super().__init__(options)
         if options.get("regions"):
             raise ValueError("FASTQ does not support region queries")
-        try:
-            self.paths = resolve_paths(options.get("path"))
-        except FileNotFoundError:
-            self.paths = []  # write mode: target needn't exist yet
+        self.paths = self._find_paths()
         self.names = select_fields(FASTQ_FIELDS, options.get("fields"))
 
     def writer(self, schema, overwrite: bool):
@@ -427,8 +419,7 @@ class FastqDataSource(GenomicStreamMixin, DataSource):
         return _struct(self.names)
 
     def reader(self, schema):
-        if not self.paths:
-            raise FileNotFoundError(f"no files match {self.options.get('path')!r}")
+        self._require_paths()
         return FastqReader(
             self.paths,
             self.schema(),

@@ -478,7 +478,7 @@ class VcfDataSource(TextFormatSource):
 
     def header(self) -> VcfHeader:
         lines = []
-        with open_text(self.paths[0]) as f:
+        with open_text(self._require_paths()[0]) as f:
             for line in f:
                 if not line.startswith("#"):
                     break

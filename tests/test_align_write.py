@@ -15,7 +15,9 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-FX = "/root/reference/fixtures/"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FX = fixtures_dir() + "/"
 
 
 @pytest.fixture(scope="module")
@@ -64,6 +66,7 @@ def test_bam_roundtrip_and_standard_bgzf(gspark, tmp_path, bam_header):
     assert _rows(back) == _rows(df)
 
 
+@needs_checkout
 def test_distributed_parts_and_overwrite(gspark, tmp_path, bam_header):
     df = gspark.read.format("bam").load(FX + "sample.bam").repartition(3)
     out = str(tmp_path / "parts")
@@ -191,6 +194,7 @@ def test_tags_roundtrip_sam_and_bam(gspark, tmp_path, bam_header):
         assert _rows(back) == _rows(df), fmt
 
 
+@needs_checkout  # CRAM keeps no MAPQ for unmapped reads
 def test_cram_roundtrip_fixtures(gspark, tmp_path, bam_header):
     """CRAM writer (no-ref profile): BAM and SAM fixtures round-trip
     exactly through our CRAM decoder — no reference FASTA needed on
@@ -247,6 +251,7 @@ def test_cram_roundtrip_edge_records(gspark, tmp_path):
     assert _rows(back) == _rows(df)
 
 
+@needs_checkout
 def test_cram_distributed_parts(gspark, tmp_path, bam_header):
     import glob as _glob
 
@@ -551,6 +556,7 @@ def test_idxstats_from_written_indexes(gspark, tmp_path):
         assert sorted(x.qname for x in got_q) == sorted(exp), kind
 
 
+@needs_checkout
 def test_idxstats_real_fixture_matches_records(gspark):
     """The samtools-produced fixture .bai carries real pseudo-bins:
     idxstats from the index must equal per-contig counts from a full
@@ -603,6 +609,7 @@ def test_rans4x8_encode_roundtrip_property():
     assert _block(4, 1, rand, codec="rans")[0] == 0
 
 
+@needs_checkout  # CRAM keeps no MAPQ for unmapped reads
 def test_cram_rans_codec_roundtrip_and_size(gspark, tmp_path, bam_header):
     """codec=rans CRAM: external data series rANS-4x8-coded (block
     method 4 on the wire), exact record round-trip through the repo's

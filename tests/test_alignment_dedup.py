@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oxbow_spark.operators import alignment_dedup as AD
+from tests.corpus import fixtures_dir, needs_checkout
 
 
 def _qual(scores):
@@ -67,11 +68,12 @@ def test_mark_duplicates_end_to_end(spark):
     assert out.columns == cols
 
 
+@needs_checkout  # needs a BAM without duplicate pairs
 def test_mark_duplicates_runs_on_fixture_bam(spark):
     from oxbow_spark.sources import register_all
 
     register_all(spark)
-    bam = spark.read.format("bam").load("/root/reference/fixtures/sample.bam")
+    bam = spark.read.format("bam").load(f"{fixtures_dir()}/sample.bam")
     out = AD.mark_duplicates(bam)
     # fixture reads all have distinct signatures: paired qnames survive
     paired = (

@@ -14,8 +14,9 @@ import pyarrow as pa
 import pytest
 
 import oxbow_spark as ox
+from tests.corpus import fixtures_dir, needs_checkout
 
-FX = "/root/reference/fixtures/"
+FX = fixtures_dir() + "/"
 
 
 def _ipc_table(b: bytes) -> pa.Table:
@@ -38,6 +39,7 @@ def test_public_surface_matches_reference():
         assert callable(getattr(ox, nm))
 
 
+@needs_checkout
 def test_from_bam_driver_side_equals_spark(spark):
     f = ox.from_bam(FX + "sample.bam")
     local = f.to_arrow()
@@ -51,6 +53,7 @@ def test_from_bam_driver_side_equals_spark(spark):
     assert lp["cigar"].tolist() == dp["cigar"].tolist()
 
 
+@needs_checkout
 def test_from_bam_regions_fields_and_schema():
     f = ox.from_bam(
         FX + "sample.bam", regions="chr1:1-100000",
@@ -62,6 +65,7 @@ def test_from_bam_regions_fields_and_schema():
     assert t.num_rows == 2
 
 
+@needs_checkout
 def test_explicit_index_option(tmp_path):
     # index= overrides sidecar discovery (reference from_bam(index=...)):
     # the BAM sits alone in a temp dir, its BAI under an unrelated name
@@ -73,6 +77,7 @@ def test_explicit_index_option(tmp_path):
     assert t.num_rows == 2
 
 
+@needs_checkout
 def test_callable_and_filelike_sources():
     t = ox.from_bam(lambda: open(FX + "sample.bam", "rb")).to_arrow()
     assert t.num_rows == 10
@@ -92,6 +97,7 @@ def test_with_tags_and_tag_defs():
     assert "tags" not in base.to_arrow().schema.names
 
 
+@needs_checkout
 def test_read_bam_one_shot_ipc():
     t = _ipc_table(ox.read_bam(FX + "sample.bam"))
     assert t.num_rows == 10
@@ -99,6 +105,7 @@ def test_read_bam_one_shot_ipc():
     assert t2.num_rows == 2
 
 
+@needs_checkout
 def test_vcf_bcf_through_facade():
     # (sample.vcf and sample.bcf are unrelated fixtures — 25 vs 100
     # records; VCF↔BCF value equality is covered by tests/test_csi.py)
@@ -109,6 +116,7 @@ def test_vcf_bcf_through_facade():
     assert v.schema.names[:2] == b.schema.names[:2] == ["chrom", "pos"]
 
 
+@needs_checkout
 def test_fasta_region_slice_and_gzi(tmp_path):
     t = ox.from_fasta(FX + "sample.fasta", regions="seq1:1-10").to_arrow()
     assert t.column("sequence").to_pylist() == ["ATGCATGCAT"]
@@ -124,6 +132,7 @@ def test_fasta_region_slice_and_gzi(tmp_path):
     assert t2.column("sequence").to_pylist() == ["ATGCATGCAT"]
 
 
+@needs_checkout
 def test_cram_with_reference_index(tmp_path):
     # reference= and reference_index= under unrelated names
     ref = tmp_path / "genome.fa"
@@ -137,6 +146,7 @@ def test_cram_with_reference_index(tmp_path):
     assert all(s for s in t.column("seq").to_pylist())
 
 
+@needs_checkout
 def test_bigwig_zoom_selection():
     bw = ox.from_bigwig(FX + "sample.bw")
     levels = bw.zoom_levels
@@ -150,6 +160,7 @@ def test_bigwig_zoom_selection():
         bw.zoom(levels[0] - 1)
 
 
+@needs_checkout
 def test_bed_gtf_gff_bigbed_facades():
     assert ox.from_bed(FX + "sample.bed").to_arrow().num_rows > 0
     assert ox.from_gtf(FX + "example.gtf").to_arrow().num_rows > 0
@@ -158,6 +169,7 @@ def test_bed_gtf_gff_bigbed_facades():
     assert _ipc_table(ox.read_fastq(FX + "sample.fastq")).num_rows > 0
 
 
+@needs_checkout
 def test_batches_stream_and_empty_schema():
     batches = list(ox.from_bam(FX + "sample.bam").batches())
     assert all(isinstance(b, pa.RecordBatch) for b in batches)
@@ -178,6 +190,25 @@ def test_missing_path_raises_at_read():
         ox.from_bigwig("/nonexistent/nope.bw").to_arrow()
     with pytest.raises(FileNotFoundError):
         ox.from_fasta("/nonexistent/nope.fa").to_arrow()
+    # header reads, tag scans and BBI metadata go through the same check
+    from oxbow_spark.sources.bam import BamDataSource
+    from oxbow_spark.sources.bbi import BigWigDataSource
+    from oxbow_spark.sources.bcf import BcfDataSource
+    from oxbow_spark.sources.sam import SamDataSource
+    from oxbow_spark.sources.vcf import VcfDataSource
+
+    for cls, ext in ((BamDataSource, "bam"), (SamDataSource, "sam"),
+                     (VcfDataSource, "vcf"), (BcfDataSource, "bcf")):
+        with pytest.raises(FileNotFoundError):
+            cls({"path": f"/nonexistent/nope.{ext}"}).header()
+    with pytest.raises(FileNotFoundError):
+        ox.from_bam("/nonexistent/nope.bam").with_tags().to_arrow()
+    with pytest.raises(FileNotFoundError):
+        ox.from_sam("/nonexistent/nope.sam").with_tags().to_arrow()
+    with pytest.raises(FileNotFoundError):
+        ox.from_bigwig("/nonexistent/nope.bw").zoom_levels
+    with pytest.raises(FileNotFoundError):
+        BigWigDataSource({"path": "/nonexistent/nope.bw"}).chrom_sizes()
 
 
 def test_to_spark_registers_once_per_session(spark, tmp_path, monkeypatch):

@@ -1,6 +1,6 @@
-"""BAM DataSource tests: spark.read.format('bam') against the reference
-fixture (sample.bam + .bai), cross-checked against structural invariants
-and the index-driven partition planner."""
+"""BAM DataSource tests: spark.read.format('bam') against the fixture
+sample.bam + .bai (tests/corpus.py resolves the directory), cross-checked
+against structural invariants and the index-driven partition planner."""
 
 from __future__ import annotations
 
@@ -9,7 +9,9 @@ import struct
 
 import pytest
 
-FIX = "/root/reference/fixtures"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FIX = fixtures_dir()
 BAM = f"{FIX}/sample.bam"
 
 
@@ -65,6 +67,7 @@ def test_bam_matches_region_query(gspark):
     assert got == want and got  # non-empty
 
 
+@needs_checkout
 def test_bam_tags_scan(gspark):
     df = gspark.read.format("bam").option("tags", "scan").load(BAM)
     t = {f.name: f.dataType.simpleString() for f in df.schema["tags"].dataType.fields}
@@ -73,11 +76,26 @@ def test_bam_tags_scan(gspark):
     assert row.NM is not None
 
 
+def test_bam_array_tags_decode_like_sam_text():
+    """A B-array tag decoded from BAM bytes parses to the same list as
+    its SAM text form (it used to come back null)."""
+    from oxbow_spark.models.sam_header import TagDef
+    from oxbow_spark.sources.bam import decode_tags
+
+    buf = (b"BQBC" + struct.pack("<i", 3) + bytes([1, 2, 3])
+           + b"XFBf" + struct.pack("<if", 1, 0.5))
+    tags = decode_tags(buf, 0, len(buf))
+    bq = TagDef("BQ", "BC")
+    assert bq.parse(*tags["BQ"]) == bq.parse("B", "C,1,2,3") == [1, 2, 3]
+    assert TagDef("XF", "Bf").parse(*tags["XF"]) == [0.5]
+
+
 def test_bam_explicit_tag_defs(gspark):
     df = gspark.read.format("bam").option("tag_defs", "NM:i,MD:Z").load(BAM)
     assert [f.name for f in df.schema["tags"].dataType.fields] == ["NM", "MD"]
 
 
+@needs_checkout  # keys records by qname; FIXTURES.md read pairs share one
 def test_bam_projection_and_coords(gspark):
     df = (
         gspark.read.format("bam").option("fields", "rname,pos,end,qname")
@@ -109,6 +127,8 @@ def test_bam_header_metadata():
 def test_bam_malformed():
     from oxbow_spark.sources.bam import BamDataSource
 
+    # the twin must exist: a missing path would raise too
+    assert os.path.exists(f"{FIX}/malformed.bam")
     with pytest.raises(Exception):
         BamDataSource({"path": f"{FIX}/malformed.bam"}).header()
 

@@ -6,7 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-FIX = "/root/reference/fixtures"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FIX = fixtures_dir()
 BW = f"{FIX}/sample.bw"
 BB = f"{FIX}/sample.bb"
 
@@ -19,6 +21,7 @@ def gspark(spark):
     return spark
 
 
+@needs_checkout
 def test_bigwig_scan(gspark):
     df = gspark.read.format("bigwig").load(BW)
     rows = df.collect()
@@ -28,6 +31,7 @@ def test_bigwig_scan(gspark):
     assert df.schema["value"].dataType.typeName() == "float"
 
 
+@needs_checkout
 def test_bigwig_region(gspark):
     reg = (
         gspark.read.format("bigwig")
@@ -40,12 +44,14 @@ def test_bigwig_region(gspark):
     assert empty.count() == 0
 
 
+@needs_checkout
 def test_bigwig_coords(gspark):
     a = gspark.read.format("bigwig").load(BW).first()
     b = gspark.read.format("bigwig").option("coords", "11").load(BW).first()
     assert b.start == a.start + 1 and b.end == a.end
 
 
+@needs_checkout
 def test_bigbed_scan(gspark):
     df = gspark.read.format("bigbed").load(BB)
     rows = df.collect()
@@ -53,6 +59,7 @@ def test_bigbed_scan(gspark):
     assert rows[0].chrom == "chr21" and rows[0].start == 14797911
 
 
+@needs_checkout
 def test_zoom_scan(gspark):
     z = gspark.read.format("bigwig").option("zoom", "0").load(BW)
     rows = z.collect()
@@ -62,6 +69,7 @@ def test_zoom_scan(gspark):
         gspark.read.format("bigwig").option("zoom", "9").load(BW).collect()
 
 
+@needs_checkout
 def test_metadata(gspark):
     from oxbow_spark.sources.bbi import BigWigDataSource
 
@@ -70,6 +78,7 @@ def test_metadata(gspark):
     assert src.zoom_levels() == [2621440, 10485760, 41943040]
 
 
+@needs_checkout
 def test_zoom_aggregate_parity(gspark):
     """Our zoom_aggregate operator over base signal must agree with the
     reference's precomputed zoom table on bin-independent totals
@@ -207,6 +216,7 @@ def test_bigbed_rest_override(gspark, tmp_path):
     assert df.first().rest.startswith("peak1\t")
 
 
+@needs_checkout
 def test_bigbed_fixture_bed3_autosql(gspark):
     # sample.bb declares plain bed3: no custom columns, no rest
     df = gspark.read.format("bigbed").load(BB)

@@ -10,8 +10,9 @@ import pyarrow as pa
 import pytest
 
 from tests.bcf_synth import write_bcf, write_bcf_wide
+from tests.corpus import fixtures_dir, needs_checkout
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 def _scan(path: str, opts: dict) -> pa.Table:
@@ -49,6 +50,7 @@ def test_fast_equals_slow_synth(synth, opts):
     assert fast.num_rows > 0
 
 
+@needs_checkout
 def test_fast_equals_slow_fixture():
     fast = _scan(f"{FIX}/sample.bcf", {})
     slow = _scan(f"{FIX}/sample.bcf", {"slow_decode": "true"})

@@ -9,8 +9,9 @@ import gzip
 import pytest
 
 from oxbow_spark.sources.bed import BedCodec, BedDataSource
+from tests.corpus import fixtures_dir, needs_checkout
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 def _collect(ds: BedDataSource, slow: bool = False):
@@ -50,6 +51,7 @@ def bed12_file(tmp_path_factory):
     return str(p)
 
 
+@needs_checkout
 def test_fixture_beds_fast_equals_slow():
     cases = [
         (f"{FIX}/sample.bed", {"bed_schema": "bed9"}),       # 9-column file

@@ -7,7 +7,9 @@ import os
 
 import pytest
 
-FX = "/root/reference/fixtures/"
+from tests.corpus import fixtures_dir
+
+FX = fixtures_dir() + "/"
 
 
 @pytest.fixture(scope="module")

@@ -9,8 +9,9 @@ import struct
 import pytest
 
 from oxbow_spark.sources.cram import rans4x8_decode
+from tests.corpus import CHECKOUT, needs_checkout
 
-FIX = "/root/reference/fixtures"
+FIX = CHECKOUT
 
 
 @pytest.fixture(scope="module")
@@ -21,6 +22,7 @@ def gspark(spark):
     return spark
 
 
+@needs_checkout
 def test_cram_matches_sam(gspark):
     cram = sorted(tuple(r) for r in
                   gspark.read.format("cram").load(f"{FIX}/sample.cram").collect())
@@ -30,6 +32,7 @@ def test_cram_matches_sam(gspark):
     assert len(cram) == 3
 
 
+@needs_checkout
 def test_cram_region_pushdown(gspark):
     df = gspark.read.format("cram").option("regions", "chr1:25-40").load(
         f"{FIX}/sample.cram")
@@ -42,6 +45,7 @@ def test_cram_region_pushdown(gspark):
     assert [r.qname for r in df2.collect()] == ["r001"]
 
 
+@needs_checkout
 def test_crai_planning_matches_header_walk(gspark, tmp_path):
     """With a .crai the planner reads one small index instead of walking
     every container header; results must be identical either way."""
@@ -68,6 +72,7 @@ def test_crai_planning_matches_header_walk(gspark, tmp_path):
         assert ra == rb
 
 
+@needs_checkout
 def test_cram_multi_region_no_duplicates(gspark):
     # overlapping regions must behave as their union: one partition per
     # container, union residual — never one row per matching region
@@ -81,6 +86,7 @@ def test_cram_multi_region_no_duplicates(gspark):
     assert len(both) == len(set(both)) == 3
 
 
+@needs_checkout
 def test_cram_projection_and_coords(gspark):
     df = (
         gspark.read.format("cram")
@@ -96,6 +102,7 @@ def test_cram_projection_and_coords(gspark):
     assert got["r001"] == (36, 45)
 
 
+@needs_checkout
 def test_cram_tags_scan(gspark):
     df = gspark.read.format("cram").option("tags", "scan").load(
         f"{FIX}/sample.cram")
@@ -105,6 +112,7 @@ def test_cram_tags_scan(gspark):
     assert all(r.tags.cF == 3 for r in rows)
 
 
+@needs_checkout
 def test_cram31_external_reference(gspark):
     """sample-ref.cram is CRAM 3.1 (rANS Nx16 blocks, no embedded
     reference): decoding against sample-ref.fa must equal the SAM twin."""
@@ -135,6 +143,7 @@ def test_rans_nx16_pack_cat():
     assert rans_nx16_decode(blob) == b"QQQQQ"
 
 
+@needs_checkout
 def test_cram_limit(gspark):
     df = gspark.read.format("cram").option("limit", "1").load(f"{FIX}/sample.cram")
     # limit applies per partition (container); 2 containers → ≤ 2 rows

@@ -10,6 +10,8 @@ import zlib
 
 import pytest
 
+from tests.corpus import CHECKOUT, needs_checkout
+
 
 def itf8(v: int) -> bytes:
     v &= 0xFFFFFFFF
@@ -326,11 +328,12 @@ def test_columnar_equals_loop_big(tmp_path):
     assert len(fast) == 5000
 
 
+@needs_checkout
 def test_columnar_equals_loop_fixture():
     """Real htslib fixture (const-huffman series, BYTE_ARRAY_LEN BB
     declared-but-unused, tags): equality holds whether a slice decodes
     columnar or bails to the loop."""
-    FIX = "/root/reference/fixtures"
+    FIX = CHECKOUT
     fast = _scan_rows(f"{FIX}/sample.cram")
     slow = _scan_rows(f"{FIX}/sample.cram", force_loop=True)
     assert fast == slow

@@ -8,7 +8,9 @@ import shutil
 
 import pytest
 
-FIX = "/root/reference/fixtures"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FIX = fixtures_dir()
 
 
 @pytest.fixture(scope="module")
@@ -19,6 +21,7 @@ def gspark(spark):
     return spark
 
 
+@needs_checkout
 def test_csi_parse_structure():
     from oxbow_spark.sources.bgzf import CsiIndex
 
@@ -43,6 +46,7 @@ def test_csi_reg2bins_matches_bai_instance():
     assert 0 in bins and all(b < 37449 for b in bins)
 
 
+@needs_checkout
 def test_bcf_region_prunes_partitions():
     from oxbow_spark.sources.bcf import BcfDataSource, BcfReader
 
@@ -58,6 +62,7 @@ def test_bcf_region_prunes_partitions():
     assert 0 < total_reg < total_full
 
 
+@needs_checkout
 def test_bcf_chunked_scan_equality(gspark):
     kw = dict(genotype_fields="GT", samples="HG00096", info_fields="AC,AN")
     whole = gspark.read.format("bcf").options(**kw).load(f"{FIX}/sample.bcf")
@@ -71,6 +76,7 @@ def test_bcf_chunked_scan_equality(gspark):
     assert a == b and len(a) == 100
 
 
+@needs_checkout
 def test_bcf_multi_region_no_duplicates(gspark):
     kw = dict(genotype_fields="", info_fields="")
 
@@ -87,6 +93,7 @@ def test_bcf_multi_region_no_duplicates(gspark):
     assert len(merged) == len(set(merged))
 
 
+@needs_checkout
 def test_vcf_gz_csi_only_pushdown(gspark, tmp_path):
     # a bgzipped VCF shipping only a .csi (no .tbi) still gets
     # index-pushed region chunks

@@ -8,8 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from oxbow_spark.operators.flagstat import flagstat
+from tests.corpus import fixtures_dir
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 def test_flagstat_hand_computed(spark):

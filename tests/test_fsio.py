@@ -1,10 +1,10 @@
 """Remote-opener layer (`sources/fsio`): local paths use the stdlib, URLs
 route through fsspec when importable, and fail with a clear message when
-not. The container has no fsspec, so the remote protocol is exercised with
-a minimal stub injected into sys.modules that maps ``mock://<rel>`` onto
-the reference fixture directory — driver-side only, which is enough
-because the DataSource readers are plain Python objects whose
-``partitions()``/``read()`` can be driven in-process.
+not. Without fsspec installed, the remote protocol is exercised with a
+minimal stub injected into sys.modules that maps ``mock://<rel>`` onto
+the fixture directory that ``tests/corpus.py`` resolves — driver-side
+only, which is enough because the DataSource readers are plain Python
+objects whose ``partitions()``/``read()`` can be driven in-process.
 
 Reference parity: py-oxbow/oxbow/_core/base.py:386-463 (fsspec URL
 handling for every scanner).
@@ -19,8 +19,9 @@ import types
 import pytest
 
 from oxbow_spark.sources import fsio
+from tests.corpus import fixtures_dir
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 # ---------------------------------------------------------------- stub fsspec

@@ -9,8 +9,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from oxbow_spark.functions import genomics as G
+from tests.corpus import fixtures_dir
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 @pytest.fixture(scope="module")

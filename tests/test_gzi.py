@@ -23,8 +23,9 @@ from oxbow_spark.sources.sequence import (
     read_fai,
     read_gzi,
 )
+from tests.corpus import fixtures_dir
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 BGZF_EOF = bytes.fromhex(
     "1f8b08040000000000ff0600424302001b0003000000000000000000"
 )

@@ -7,8 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from oxbow_spark.operators.nuc import gc_windows, nuc_stats
+from tests.corpus import fixtures_dir
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 @pytest.fixture(scope="module")

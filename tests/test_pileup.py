@@ -13,6 +13,7 @@ from oxbow_spark.operators.pileup import (
     pileup,
     ref_bases_frame,
 )
+from tests.corpus import fixtures_dir
 
 _CIG = re.compile(r"(\d+)([MIDNSHP=X])")
 
@@ -137,7 +138,7 @@ def test_pileup_on_bam_fixture(spark):
 
     register_all(spark)
     df = spark.read.format("bam").load(
-        "/root/reference/fixtures/sample.bam")
+        f"{fixtures_dir()}/sample.bam")
     rows = [(r.rname, r.pos, r.cigar, r.seq)
             for r in df.select("rname", "pos", "cigar", "seq").collect()
             if r.rname is not None]
@@ -195,7 +196,7 @@ def test_ref_bases_frame_and_end_to_end_fasta(spark):
 
     register_all(spark)
     fa = spark.read.format("fasta").load(
-        "/root/reference/fixtures/sample.fasta")
+        f"{fixtures_dir()}/sample.fasta")
     ref = ref_bases_frame(fa)
     one = {r.refpos: r.ref_base
            for r in ref.where(ref.rname == ref.first().rname)

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oxbow_spark.operators.popgen import allele_stats, genotype_alleles
+from tests.corpus import fixtures_dir, needs_checkout
 
 
 def _py_stats(variants):
@@ -83,13 +84,14 @@ def test_allele_stats_hand_and_reference(spark):
     assert got[("1", 100)][0] == 6 and got[("1", 100)][1] == [3]
 
 
+@needs_checkout
 def test_allele_stats_on_vcf_fixture(spark):
     from oxbow_spark.sources import register_all
 
     register_all(spark)
     df = (spark.read.format("vcf")
           .option("genotypes", "true").option("samples_nested", "true")
-          .load("/root/reference/fixtures/sample.vcf"))
+          .load(f"{fixtures_dir()}/sample.vcf"))
     with_al = df.withColumn("alleles", genotype_alleles(df))
     out = allele_stats(with_al)
     rows = [(r.chrom, r.pos, r.ref, list(r.alt),
@@ -116,7 +118,7 @@ def test_sample_qc(spark):
     register_all(spark)
     df = (spark.read.format("vcf")
           .option("genotypes", "true").option("samples_nested", "true")
-          .load("/root/reference/fixtures/sample.vcf"))
+          .load(f"{fixtures_dir()}/sample.vcf"))
     got = {r.sample: r for r in sample_qc(df).collect()}
     names = [f.name for f in df.schema["samples"].dataType.fields]
     assert set(got) == set(names)

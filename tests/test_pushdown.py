@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, LessThan
 
 from oxbow_spark.sources.pushdown import region_from_filters
+from tests.corpus import fixtures_dir, needs_checkout
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 
 
 @pytest.fixture(scope="module")
@@ -62,6 +63,7 @@ def test_bam_filter_pushdown_matches_plain_filter(gspark):
     assert len(got) > 0
 
 
+@needs_checkout
 def test_cram_filter_pushdown_matches_plain_filter(gspark):
     cram = f"{FIX}/sample.cram"
     pushed = (

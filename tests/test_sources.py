@@ -1,6 +1,9 @@
-"""Genomic DataSource tests against the reference fixture corpus
-(/root/reference/fixtures — read-only test inputs; expectations follow the
-reference's documented scanner behavior, SURVEY §2.1/§5)."""
+"""Genomic DataSource tests against the fixture directory that
+``tests/corpus.py`` resolves: the oxbow checkout's ``fixtures/`` when it
+exists, else the generated FIXTURES.md corpus (read-only test inputs;
+expectations follow the reference's documented scanner behavior, SURVEY
+§2.1/§5). Tests that assert values of the checkout's own files carry
+``needs_checkout``."""
 
 from __future__ import annotations
 
@@ -9,7 +12,9 @@ import os
 
 import pytest
 
-FIX = "/root/reference/fixtures"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FIX = fixtures_dir()
 
 
 @pytest.fixture(scope="session")
@@ -31,6 +36,7 @@ def _data_lines(path, comment=("#", "track", "browser")):
 
 # ------------------------------------------------------------------- BED
 
+@needs_checkout
 def test_bed_basic(gspark):
     df = gspark.read.format("bed").option("bed_schema", "bed9").load(f"{FIX}/sample.bed")
     rows = df.collect()
@@ -73,6 +79,7 @@ def test_bed_projection_and_errors(gspark):
         gspark.read.format("bed").option("bed_schema", "bed2").load(f"{FIX}/sample.bed").schema
 
 
+@needs_checkout
 def test_bed_rest_column(gspark):
     df = gspark.read.format("bed").option("bed_schema", "bed3+").load(f"{FIX}/sample.bed")
     r0 = df.first()
@@ -80,6 +87,7 @@ def test_bed_rest_column(gspark):
     assert r0.rest.startswith("A1\t")
 
 
+@needs_checkout
 def test_bed_region_filter(gspark):
     df = (
         gspark.read.format("bed").option("bed_schema", "bed9")
@@ -91,6 +99,7 @@ def test_bed_region_filter(gspark):
     assert any(r.start < 1150000 for r in rows)
 
 
+@needs_checkout
 def test_bed_partitioned_split(gspark, tmp_path):
     # newline-aligned byte splits must not drop or duplicate records
     src = open(f"{FIX}/sample.bed").read()
@@ -121,6 +130,7 @@ def test_bed_split_boundary_at_line_start(gspark, tmp_path):
 
 # ------------------------------------------------------------------- GXF
 
+@needs_checkout
 def test_gtf_attributes_scan(gspark):
     df = (
         gspark.read.format("gtf").option("attributes", "scan")
@@ -142,6 +152,7 @@ def test_gtf_no_attributes_by_default(gspark):
     assert df.columns == ["seqid", "source", "type", "start", "end", "score", "strand", "frame"]
 
 
+@needs_checkout
 def test_gff_attributes(gspark):
     df = (
         gspark.read.format("gff").option("attributes", "scan")
@@ -152,6 +163,7 @@ def test_gff_attributes(gspark):
     assert r0.type == "mRNA" and r0.start == 1300
 
 
+@needs_checkout
 def test_gtf_region_and_coords(gspark):
     base = gspark.read.format("gtf").load(f"{FIX}/sample.gtf")
     shifted = gspark.read.format("gtf").option("coords", "01").load(f"{FIX}/sample.gtf")
@@ -167,6 +179,7 @@ def test_gtf_region_and_coords(gspark):
 
 # ------------------------------------------------------------------- SAM
 
+@needs_checkout
 def test_sam_standard_fields(gspark):
     df = gspark.read.format("sam").load(f"{FIX}/sample.sam")
     rows = {r.qname: r for r in df.collect()}
@@ -182,6 +195,7 @@ def test_sam_standard_fields(gspark):
     assert r003.end == 29 + 5 - 1  # hard clip consumes nothing
 
 
+@needs_checkout
 def test_sam_header_metadata(gspark):
     from oxbow_spark.sources.sam import SamDataSource
 
@@ -191,6 +205,7 @@ def test_sam_header_metadata(gspark):
     assert h.chrom_sizes == {"chr1": 45, "chr2": 40}
 
 
+@needs_checkout
 def test_sam_region_query(gspark):
     df = (
         gspark.read.format("sam").option("regions", "chr1:20-30")
@@ -201,6 +216,7 @@ def test_sam_region_query(gspark):
     assert names == {"r004", "r003"}
 
 
+@needs_checkout
 def test_sam_coords_shift(gspark):
     df = gspark.read.format("sam").option("coords", "01").load(f"{FIX}/sample.sam")
     r = {x.qname: x for x in df.collect()}
@@ -210,6 +226,7 @@ def test_sam_coords_shift(gspark):
 
 # ------------------------------------------------------------------- VCF
 
+@needs_checkout
 def test_vcf_schema_and_values(gspark):
     df = gspark.read.format("vcf").load(f"{FIX}/sample.vcf")
     data = _data_lines(f"{FIX}/sample.vcf", comment=("#",))
@@ -260,6 +277,7 @@ def test_vcf_genotype_by_field_and_nested(gspark):
     assert "samples" in nested.columns
 
 
+@needs_checkout
 def test_vcf_info_subset_and_projection(gspark):
     df = (
         gspark.read.format("vcf").option("info_fields", "AC,AN")
@@ -280,6 +298,7 @@ def test_vcf_gz(gspark):
 
 # ------------------------------------------------------------- sequences
 
+@needs_checkout
 def test_fasta_records(gspark):
     df = gspark.read.format("fasta").load(f"{FIX}/sample.fasta")
     rows = {r.name: r for r in df.collect()}
@@ -287,6 +306,7 @@ def test_fasta_records(gspark):
     assert rows["seq1"].sequence.startswith("ATGCATGC")
 
 
+@needs_checkout
 def test_fasta_region_slice(gspark):
     # one row per region; 1-based closed "seq1:2-5" → 0-based [1,5)
     df = (
@@ -318,12 +338,16 @@ def test_fastq_gz_matches(gspark):
 # ------------------------------------------------------------- malformed
 
 def test_malformed_errors(gspark):
+    # the twins must exist: a missing path would raise too
+    assert os.path.exists(f"{FIX}/malformed.gtf")
+    assert os.path.exists(f"{FIX}/malformed.fastq")
     with pytest.raises(Exception):
         gspark.read.format("gtf").load(f"{FIX}/malformed.gtf").collect()
     with pytest.raises(Exception):
         gspark.read.format("fastq").load(f"{FIX}/malformed.fastq").collect()
 
 
+@needs_checkout
 def test_multi_region_semicolon(gspark):
     df = (
         gspark.read.format("bed").option("bed_schema", "bed9")
@@ -335,6 +359,7 @@ def test_multi_region_semicolon(gspark):
 
 # ------------------------------------------------------------------ tabix
 
+@needs_checkout
 def test_tabix_region_pushdown_vcf(gspark):
     kw = dict(info_fields="", genotype_fields="")
     plain = (
@@ -350,6 +375,7 @@ def test_tabix_region_pushdown_vcf(gspark):
     assert a == b and a  # index-pushed scan ≡ residual-filtered full scan
 
 
+@needs_checkout
 def test_tabix_region_pushdown_bed(gspark):
     p = (
         gspark.read.format("bed").option("bed_schema", "bed9")
@@ -363,6 +389,7 @@ def test_tabix_region_pushdown_bed(gspark):
     assert p.count() == 2
 
 
+@needs_checkout
 def test_tabix_full_scan_complete(gspark):
     kw = dict(info_fields="", genotype_fields="")
     gz = gspark.read.format("vcf").options(**kw).load(f"{FIX}/sample.vcf.gz")
@@ -372,6 +399,7 @@ def test_tabix_full_scan_complete(gspark):
 
 # -------------------------------------------------------------------- BCF
 
+@needs_checkout
 def test_bcf_matches_ubcf(gspark):
     kw = dict(genotype_fields="GT", samples="HG00096,HG00101", info_fields="AC,AF,AN,DP")
     b = gspark.read.format("bcf").options(**kw).load(f"{FIX}/sample.bcf")
@@ -381,6 +409,7 @@ def test_bcf_matches_ubcf(gspark):
     assert rb == ru and len(rb) == 100
 
 
+@needs_checkout
 def test_bcf_values(gspark):
     kw = dict(genotype_fields="GT", samples="HG00096", info_fields="AC,AN")
     df = gspark.read.format("bcf").options(**kw).load(f"{FIX}/sample.bcf")
@@ -391,6 +420,7 @@ def test_bcf_values(gspark):
     assert r0.HG00096.GT.allele == [0]
 
 
+@needs_checkout
 def test_bcf_region(gspark):
     kw = dict(genotype_fields="", info_fields="")
     allrows = gspark.read.format("bcf").options(**kw).load(f"{FIX}/sample.bcf").collect()
@@ -407,6 +437,7 @@ def test_bcf_region(gspark):
     assert reg.count() == manual > 0
 
 
+@needs_checkout
 def test_fields_omit_select(gspark):
     """Select::Omit parity (`oxbow/src/lib.rs:76-84`): '-'-prefixed names
     drop columns, keeping the rest in declaration order."""

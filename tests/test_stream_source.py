@@ -12,7 +12,9 @@ import shutil
 
 import pytest
 
-FX = "/root/reference/fixtures/"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FX = fixtures_dir() + "/"
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +37,7 @@ def _run_available(gspark, src_glob, fmt, out_dir, ckpt):
     q.awaitTermination(120)
 
 
+@needs_checkout
 def test_bam_stream_ingests_files_incrementally(gspark, tmp_path):
     d = tmp_path / "runs"
     out = str(tmp_path / "out")
@@ -65,6 +68,7 @@ def test_bam_stream_ingests_files_incrementally(gspark, tmp_path):
     assert gspark.read.parquet(out).count() == 2 * batch_rows
 
 
+@needs_checkout
 def test_vcf_stream_with_options(gspark, tmp_path):
     d = tmp_path / "vcfs"
     d.mkdir()
@@ -318,6 +322,7 @@ def test_stream_sink_bam_with_index_sidecars(gspark, tmp_path):
     assert total_mapped == want
 
 
+@needs_checkout
 def test_stream_sink_vcf_with_index_sidecars(gspark, tmp_path):
     """Streaming bgzf VCF sink with index='tbi' (and a csi twin):
     every micro-batch part gets its tabix/CSI sidecar during the

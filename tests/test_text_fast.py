@@ -9,8 +9,9 @@ import pytest
 
 from oxbow_spark.sources.sam import SamDataSource
 from oxbow_spark.sources.vcf import VcfDataSource
+from tests.corpus import fixtures_dir, needs_checkout
 
-FIX = "/root/reference/fixtures"
+FIX = fixtures_dir()
 SAM = f"{FIX}/sample.sam"
 VCF = f"{FIX}/sample.vcf"
 
@@ -318,6 +319,7 @@ def test_vcf_struct_fast_equals_slow_synth(tmp_path, opts):
     assert len(fast) > 0
 
 
+@needs_checkout
 def test_vcf_struct_fast_equals_slow_fixture():
     for opts in ({}, {"samples_nested": "true"}, {"genotype_by": "field"}):
         fast = _collect(VcfDataSource({"path": VCF, **opts}))

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import pytest
 
-FIX = "/root/reference/fixtures"
+from tests.corpus import fixtures_dir
+
+FIX = fixtures_dir()
 
 
 def test_variant_stats_random_vs_python(spark):

@@ -7,7 +7,9 @@ import glob
 
 import pytest
 
-FX = "/root/reference/fixtures/"
+from tests.corpus import fixtures_dir, needs_checkout
+
+FX = fixtures_dir() + "/"
 
 
 @pytest.fixture(scope="module")
@@ -194,6 +196,7 @@ def test_gxf_writer_without_attributes_column(gspark, tmp_path):
     assert _rows(back) == _rows(df)
 
 
+@needs_checkout
 def test_bigwig_roundtrip_and_region_query(gspark, tmp_path):
     """Minimal BigWig writer: kent layout (header/summary/chrom-tree/
     bedGraph sections/R-tree), exact value round-trip through our own
@@ -235,6 +238,7 @@ def test_bigwig_roundtrip_and_region_query(gspark, tmp_path):
     assert total.count() == 4000
 
 
+@needs_checkout
 def test_bigbed_roundtrip_rest_and_autosql_typed(gspark, tmp_path):
     import glob as _glob
 
