@@ -12,9 +12,11 @@ first of these that exists:
 
 The generated corpus follows FIXTURES.md: contigs chr1-chr3 at their
 GRCh38 lengths, with every coordinate-bearing file's records tiling the
-first ``SPAN`` bases of each contig at a stride no longer than a read
-(``READ_LEN``), plus the edge cases FIXTURES.md lists per table and the
-``malformed.*`` twins. It is encoded here with struct/zlib/gzip and
+first ``SPAN`` bases of each contig, starts ``MIN_STRIDE``..``MAX_STRIDE``
+apart, plus the edge cases FIXTURES.md lists per table and the
+``malformed.*`` twins. ``MAX_STRIDE`` is the shortest reference span of a
+primary read, so the reads cover every base of the tiled span whatever
+the seed. It is encoded here with struct/zlib/gzip and
 numpy, never with oxbow_spark's writers, so a reader test stays an
 independent check. Tests that assert facts of the checkout's own files
 (htslib-made CRAM, UCSC bigWig/bigBed, literal counts and records) carry
@@ -66,7 +68,9 @@ CONTIGS = (("chr1", 248_956_422), ("chr2", 242_193_529),
            ("chr3", 198_295_559))
 SPAN = 256_000           # records tile each contig's first SPAN bases
 READ_LEN = 250
-MIN_STRIDE = 200         # record starts are MIN_STRIDE..READ_LEN apart
+MAX_CLIP = 40            # the longest clip of a primary read
+MIN_STRIDE = 200         # record starts are MIN_STRIDE..MAX_STRIDE apart
+MAX_STRIDE = READ_LEN - MAX_CLIP
 SAMPLES = ("NA12878", "NA12891", "NA12892")
 
 _BLOCK = 0xFF00          # BGZF payload per block, as htslib writes it
@@ -111,13 +115,6 @@ class _Bgzf:
         ends = np.cumsum([0] + [len(r) for r in records]).tolist()
         v = [self.voffset(u) for u in ends]
         return v[:-1], v[1:]
-
-    def gzi(self) -> bytes:
-        """``.gzi`` of a header-less stream: (compressed, uncompressed)
-        offsets of every block after the first."""
-        offs = self._coff[1:-1]
-        return struct.pack("<Q", len(offs)) + b"".join(
-            struct.pack("<QQ", c, (k + 1) * _BLOCK) for k, c in enumerate(offs))
 
     def data(self) -> bytes:
         return b"".join(self.blocks) + BGZF_EOF
@@ -181,6 +178,21 @@ def _write(path: str, data: bytes | str) -> None:
         f.write(data.encode() if isinstance(data, str) else data)
 
 
+def write_bgzf(path: str, data: bytes, block: int) -> None:
+    """bgzip-compress ``data`` in ``block``-byte chunks + write the .gzi."""
+    out, entries, coff, uoff = [], [], 0, 0
+    for i in range(0, len(data), block):
+        b = bgzf_block(data[i:i + block])
+        out.append(b)
+        coff += len(b)
+        uoff += min(block, len(data) - i)
+        entries.append((coff, uoff))
+    _write(path, b"".join(out) + BGZF_EOF)
+    entries = entries[:-1]  # gzi lists block *starts* after the first
+    _write(path + ".gzi", struct.pack("<Q", len(entries)) + b"".join(
+        struct.pack("<QQ", c, u) for c, u in entries))
+
+
 def _indexed_text(path, header: str, lines: list[str], tids, begs, ends):
     """Write a bgzipped text file; return its per-line index."""
     head = header.encode()
@@ -217,12 +229,12 @@ def _reference(rng) -> dict[str, str]:
 
 
 def _tiling(rng, length: int) -> list[int]:
-    """0-based starts, MIN_STRIDE..READ_LEN apart, for records of up to
+    """0-based starts, MIN_STRIDE..MAX_STRIDE apart, for records of up to
     ``length`` bases inside SPAN."""
     starts, s = [], int(rng.integers(0, 20))
     while s + length <= SPAN:
         starts.append(s)
-        s += int(rng.integers(MIN_STRIDE, READ_LEN + 1))
+        s += int(rng.integers(MIN_STRIDE, MAX_STRIDE + 1))
     return starts
 
 
@@ -265,6 +277,8 @@ def _random_bases(rng, n: int) -> str:
 
 
 def _cigar(rng) -> list[tuple[int, str]]:
+    """A primary read's CIGAR; it spans at least READ_LEN - MAX_CLIP
+    reference bases."""
     L = READ_LEN
     kind = rng.choice(8, p=[0.55, 0.08, 0.08, 0.08, 0.08, 0.05, 0.03, 0.05])
     a = int(rng.integers(30, L - 30))
@@ -279,7 +293,7 @@ def _cigar(rng) -> list[tuple[int, str]]:
     if kind == 4:
         return [(a, "M"), (int(rng.integers(1, 7)), "D"), (L - a, "M")]
     if kind == 5:
-        h = int(rng.integers(5, 41))
+        h = int(rng.integers(5, MAX_CLIP + 1))
         return [(h, "H"), (L - h, "M")]
     if kind == 6:
         return [(a, "M"), (int(rng.integers(50, 400)), "N"), (L - a, "M")]
@@ -912,15 +926,13 @@ def _write_sequences(d: str, ref: dict[str, str]) -> None:
     text = "".join(parts).encode()
     _write(f"{d}/sample.fasta", text)
     _write(f"{d}/sample.fasta.fai", "".join(fai))
-    stream = _Bgzf(b"", text)
-    _write(f"{d}/sample.fasta.gz", stream.data())
-    _write(f"{d}/sample.fasta.gz.gzi", stream.gzi())
+    write_bgzf(f"{d}/sample.fasta.gz", text, _BLOCK)
 
 
-def write_corpus(out_dir: str, seed: int = SEED) -> None:
+def write_corpus(out_dir: str) -> None:
     """Write the FIXTURES.md corpus into ``out_dir``."""
     os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     ref = _reference(rng)
     _write_sequences(out_dir, ref)
     _write_alignments(out_dir, _alignments(rng, ref))

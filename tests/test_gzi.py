@@ -11,8 +11,6 @@ mid-stream seek path too.
 from __future__ import annotations
 
 import shutil
-import struct
-import zlib
 
 import pytest
 
@@ -23,42 +21,9 @@ from oxbow_spark.sources.sequence import (
     read_fai,
     read_gzi,
 )
-from tests.corpus import fixtures_dir
+from tests.corpus import fixtures_dir, write_bgzf
 
 FIX = fixtures_dir()
-BGZF_EOF = bytes.fromhex(
-    "1f8b08040000000000ff0600424302001b0003000000000000000000"
-)
-
-
-def _bgzf_block(data: bytes) -> bytes:
-    co = zlib.compressobj(6, zlib.DEFLATED, -15)
-    cdata = co.compress(data) + co.flush()
-    bsize = len(cdata) + 26
-    hdr = (
-        b"\x1f\x8b\x08\x04\x00\x00\x00\x00\x00\xff"
-        + struct.pack("<H", 6) + b"BC" + struct.pack("<HH", 2, bsize - 1)
-    )
-    return hdr + cdata + struct.pack("<II", zlib.crc32(data) & 0xFFFFFFFF, len(data))
-
-
-def _write_bgzf(path: str, data: bytes, block: int) -> None:
-    """bgzip-compress ``data`` in ``block``-byte chunks + write the .gzi."""
-    out, entries, coff, uoff = [], [], 0, 0
-    for i in range(0, len(data), block):
-        b = _bgzf_block(data[i:i + block])
-        out.append(b)
-        coff += len(b)
-        uoff += min(block, len(data) - i)
-        entries.append((coff, uoff))
-    out.append(BGZF_EOF)
-    with open(path, "wb") as f:
-        f.write(b"".join(out))
-    entries = entries[:-1]  # gzi lists block *starts* after the first
-    with open(path + ".gzi", "wb") as f:
-        f.write(struct.pack("<Q", len(entries)))
-        for c, u in entries:
-            f.write(struct.pack("<QQ", c, u))
 
 
 @pytest.fixture()
@@ -119,7 +84,7 @@ def test_synthetic_multiblock_bisect(tmp_path):
         lines.append(header + body)
     data = "".join(lines).encode()
     gz = str(tmp_path / "multi.fa.gz")
-    _write_bgzf(gz, data, 512)
+    write_bgzf(gz, data, 512)
     gzi = read_gzi(gz + ".gzi")
     assert len(gzi) > 10  # real multi-block index
     # raw byte-range fetches across block boundaries
