@@ -201,13 +201,15 @@ class FastaReader(DataSourceReader):
                     seq = faidx_fetch_bgzf(path, gzi, fai, r.name, r.start, r.end)
                     rows.append(self._project(r.name, None, seq))
             else:
-                seqs = {nm: (d, s) for nm, d, s in iter_fasta(path)}
+                # no index: scan the file, but emit the same per-region
+                # rows as the indexed branches (no description)
+                seqs = {nm: s for nm, _d, s in iter_fasta(path)}
                 for r in regions:
                     if r.name not in seqs:
                         raise ValueError(f"unknown sequence {r.name!r} in FASTA file")
-                    d, s = seqs[r.name]
+                    s = seqs[r.name]
                     end = len(s) if r.end is None else min(r.end, len(s))
-                    rows.append(self._project(r.name, d, s[r.start:end]))
+                    rows.append(self._project(r.name, None, s[r.start:end]))
             yield self._emit(rows)
             return
         for name, desc, seq in iter_fasta(path):

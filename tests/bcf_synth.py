@@ -196,10 +196,9 @@ def write_bcf(path: str, n_records: int, with_samples: bool = True,
 
 def write_bcf_wide(path: str, n_records: int, n_samples: int = 96,
                    block: int = 60000) -> None:
-    """Wide synthetic BCF (many samples) — drives the vectorized FORMAT
-    slab branch (ns·ln ≥ 64 cells → one frombuffer + vectorized sentinel
-    cleanup) for both int (DP) and float (GL) fields, with EOV-truncated
-    and MISSING cells sprinkled per sample."""
+    """Wide synthetic BCF (many samples): int (DP) and float (GL) FORMAT
+    slabs of 96 cells a record, with EOV-truncated and MISSING cells
+    sprinkled per sample."""
     samples = [f"w{j}" for j in range(n_samples)]
     text = header_text(samples).encode() + b"\x00"
     out = bytearray()
@@ -220,3 +219,45 @@ def write_bcf_wide(path: str, n_records: int, n_samples: int = 96,
             float(i % 60), ["PASS"], 25 + i % 30, [0.125], gts, dps, gls,
         )
     write_bgzf(path, bytes(out), block)
+
+
+def i8_cells(cells: list[list[int | None]], width: int) -> bytes:
+    """A FORMAT value of int8 cells, one per sample: None → MISSING,
+    short cells EOV-padded to ``width``."""
+    out = bytearray(typed_meta(1, width))
+    for c in cells:
+        out += struct.pack(f"<{width}b", *[-128 if v is None else v for v in c],
+                           *[-127] * (width - len(c)))
+    return bytes(out)
+
+
+def str_cells(cells: list[str]) -> bytes:
+    """A FORMAT value of char cells, NUL-padded to the widest one."""
+    raw = [c.encode() for c in cells]
+    w = max(len(b) for b in raw)
+    return typed_meta(7, w) + b"".join(b.ljust(w, b"\x00") for b in raw)
+
+
+def encoded_record(rid: int, pos0: int, ref: str, alts: list[str],
+                   info: list[tuple[int, bytes]], fmt: list[tuple[int, bytes]],
+                   n_sample: int) -> bytes:
+    """One record from encoded pieces: ``info`` and ``fmt`` are
+    (dictionary id, typed value) pairs in wire order, so keys may repeat
+    or change order from record to record. ID '.', QUAL missing, PASS."""
+    shared = bytearray(struct.pack("<iiiI", rid, pos0, len(ref), _F32_MISSING))
+    shared += struct.pack("<II", ((1 + len(alts)) << 16) | len(info),
+                          (len(fmt) << 24) | n_sample)
+    shared += typed_str(".")
+    for a in [ref, *alts]:
+        shared += typed_str(a)
+    shared += typed_i8_vec([0])
+    for k, v in info:
+        shared += typed_int(k) + v
+    indiv = b"".join(typed_int(k) + v for k, v in fmt)
+    return struct.pack("<II", len(shared), len(indiv)) + bytes(shared) + indiv
+
+
+def write_bcf_records(path: str, header: str, records: list[bytes]) -> None:
+    text = header.encode() + b"\x00"
+    write_bgzf(path, b"BCF\x02\x02" + struct.pack("<I", len(text)) + text
+               + b"".join(records))

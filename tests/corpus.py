@@ -80,10 +80,16 @@ _generated: str | None = None
 
 def fixtures_dir() -> str:
     """The fixture directory: the checkout's when it exists, else the
-    generated corpus (written on first call, removed at exit)."""
+    generated corpus."""
+    return CHECKOUT if os.path.isdir(CHECKOUT) else generated_dir()
+
+
+def generated_dir() -> str:
+    """The generated corpus, whether or not the checkout exists: written
+    on first call, removed at exit. Tests that compare two encodings of
+    the same records read it, since the checkout's twins are unrelated
+    files."""
     global _generated
-    if os.path.isdir(CHECKOUT):
-        return CHECKOUT
     if _generated is None:
         d = tempfile.mkdtemp(prefix="oxbow-spark-fixtures-")
         atexit.register(shutil.rmtree, d, True)

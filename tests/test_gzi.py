@@ -21,7 +21,7 @@ from oxbow_spark.sources.sequence import (
     read_fai,
     read_gzi,
 )
-from tests.corpus import fixtures_dir, write_bgzf
+from tests.corpus import fixtures_dir, generated_dir, write_bgzf
 
 FIX = fixtures_dir()
 
@@ -63,6 +63,28 @@ def test_fasta_datasource_region_slice_gz(spark, gz_with_sidecars):
     )
     assert [r.sequence for r in comp] == [r.sequence for r in plain]
     assert len(plain) == 1 and len(plain[0].sequence) == 8
+
+
+def test_fasta_region_rows_same_with_and_without_index(tmp_path):
+    """A region query gives the same rows through a .fai, a .fai + .gzi,
+    or a scan of a file with no sidecars: one row per region, without
+    the header's description."""
+    from oxbow_spark import api
+
+    d = generated_dir()
+    plain, gz = tmp_path / "bare.fasta", tmp_path / "bare.fasta.gz"
+    shutil.copy(f"{d}/sample.fasta", plain)
+    shutil.copy(f"{d}/sample.fasta.gz", gz)
+    indexed_gz = tmp_path / "indexed.fasta.gz"
+    shutil.copy(f"{d}/sample.fasta.gz", indexed_gz)
+    shutil.copy(f"{d}/sample.fasta.gz.gzi", f"{indexed_gz}.gzi")
+    shutil.copy(f"{d}/sample.fasta.fai", f"{indexed_gz}.fai")
+    paths = [f"{d}/sample.fasta", f"{d}/sample.fasta.gz", plain, gz, indexed_gz]
+    rows = [api.from_fasta(str(p), regions="chr2:100-200").to_arrow().to_pylist()
+            for p in paths]
+    assert len(rows[0]) == 1 and rows[0][0]["description"] is None
+    assert len(rows[0][0]["sequence"]) == 101
+    assert all(r == rows[0] for r in rows)
 
 
 def test_synthetic_multiblock_bisect(tmp_path):
