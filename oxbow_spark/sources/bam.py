@@ -22,7 +22,6 @@ partition, default 16 MiB).
 
 from __future__ import annotations
 
-import os
 import struct
 from dataclasses import dataclass
 
@@ -48,13 +47,10 @@ from oxbow_spark.sources.base import (
     select_fields,
 )
 from oxbow_spark.sources.bgzf import (
-
-    BaiIndex,
     BgzfReader,
-    CsiIndex,
-    coalesce_chunks,
-    partition_from_index,
-    query_chunks,
+    frame_records,
+    open_index,
+    plan_ranges,
 )
 from oxbow_spark.sources import fsio
 
@@ -63,10 +59,6 @@ CIGAR_OPS = "MIDNSHP=X"
 _REF_CONSUMING = {0, 2, 3, 7, 8}  # M D N = X
 
 DEFAULT_CHUNKSIZE = 16 * 1024 * 1024
-# byte-based flush cap: seq expands ~2x from packed nibbles, so 256 MiB of
-# framed record bodies keeps every utf8 column comfortably inside the
-# int32 Arrow offset range (2 GiB) even for ultra-long reads
-MAX_BATCH_BYTES = 256 * 1024 * 1024
 
 # ---- vectorized decode tables (see _decode_columns) ----------------------
 # 4-bit seq codes expand through byte-indexed lookup: one table per nibble.
@@ -230,7 +222,7 @@ def _utf8_array(lengths: np.ndarray, data: np.ndarray, null_mask=None) -> pa.Arr
     total = int(lengths.sum()) if n else 0
     if total >= 2**31:
         # int32 Arrow offsets would wrap silently → corrupt column. The
-        # reader's byte-based flush (MAX_BATCH_BYTES) keeps batches far
+        # reader's byte-based flush (bgzf.MAX_BATCH_BYTES) keeps batches far
         # below this; hitting it means a single batch of ultra-long reads
         # slipped through — fail loudly rather than emit garbage.
         raise ValueError(
@@ -449,127 +441,54 @@ class BamReader(DataSourceReader):
             with BgzfReader(path) as r:
                 hdr, ref_names, first_vpos = read_bam_header(r)
             size = fsio.getsize(path)
-            explicit = self.index_path  # `index` option: reference parity
-            bai_path = next(
-                (p for p in (path + ".bai", path[:-4] + ".bai") if fsio.exists(p)),
-                None,
-            )
-            if explicit:
-                index = (CsiIndex.read(explicit) if explicit.endswith(".csi")
-                         else BaiIndex.read(explicit))
-            elif bai_path:
-                index = BaiIndex.read(bai_path)
-            elif fsio.exists(path + ".csi"):
-                index = CsiIndex.read(path + ".csi")  # >512 Mb chromosomes
-            else:
-                index = None
-            max_pos = 1 << (
-                getattr(index, "min_shift", 14) + getattr(index, "depth", 5) * 3
-            )
-            if self.regions:
-                # regions are pre-merged (coords.merge_regions); chunks are
-                # pooled across regions and coalesced, and every partition
-                # residual-checks the whole union, so a record overlapping
-                # two regions — or two regions sharing an index chunk — is
-                # emitted exactly once.
-                mapped = [r for r in self.regions if not r.is_unmapped]
+            index, _ = open_index(self.index_path, (
+                path + ".bai", path[:-4] + ".bai", path + ".csi"))
+            whole = [(first_vpos, size << 16)]
+            if not self.regions:
+                ranges = (plan_ranges(index, ref_names, None, self.chunksize,
+                                      first_vpos, size) if index else whole)
+                parts.extend(BamPartition(path, vs, ve) for vs, ve in ranges)
+                continue
+            # every partition residual-checks the whole union, so a record
+            # overlapping two (pre-merged) regions is emitted once
+            mapped = [r for r in self.regions if not r.is_unmapped]
+            if mapped:
                 resid = _coords.residual_entries(mapped)
-                if index is None and mapped:
-                    parts.append(BamPartition(path, first_vpos, size << 16, resid))
-                elif mapped:
-                    chunks: list[tuple[int, int]] = []
-                    for reg in mapped:
-                        if reg.name not in ref_names:
-                            continue  # unknown chrom: zero hits by definition
-                        rid = ref_names.index(reg.name)
-                        end = reg.end if reg.end is not None else max_pos
-                        chunks.extend(query_chunks(index, rid, reg.start, end))
-                    for cb, ce in coalesce_chunks(chunks):
-                        parts.append(BamPartition(path, cb, ce, resid))
-                if any(r.is_unmapped for r in self.regions):
-                    # unmapped section: after the last indexed chunk
-                    start = first_vpos
-                    if index:
-                        ends = [
-                            ce for ref in index.refs
-                            for cs in ref.bins.values() for _, ce in cs
-                        ]
-                        if ends:
-                            start = max(ends)
-                    parts.append(BamPartition(path, start, size << 16, (("*",),)))
-            elif index is not None:
-                for vs, ve in partition_from_index(index, self.chunksize, first_vpos, size):
-                    parts.append(BamPartition(path, vs, ve))
-            else:
-                parts.append(BamPartition(path, first_vpos, size << 16))
+                ranges = (plan_ranges(index, ref_names, mapped, self.chunksize,
+                                      first_vpos, size) if index else whole)
+                parts.extend(BamPartition(path, vs, ve, resid) for vs, ve in ranges)
+            if len(mapped) < len(self.regions):
+                # unmapped section: after the last indexed chunk
+                ends = [ce for ref in index.refs for cs in ref.bins.values()
+                        for _, ce in cs] if index else []
+                parts.append(BamPartition(
+                    path, max(ends, default=first_vpos), size << 16, (("*",),)))
         # Spark requires ≥1 partition: a region with no index hits yields an
         # empty vpos range (reads nothing but keeps the plan valid)
         return parts or [BamPartition(self.paths[0], 0, 0)]
 
     # -- execution --------------------------------------------------------
-    def _emit(self, rows):
-        cols = list(zip(*rows)) if rows else [[] for _ in self._arrow_schema]
-        arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, self._arrow_schema)]
-        return pa.RecordBatch.from_arrays(arrays, schema=self._arrow_schema)
-
     def read(self, part: BamPartition):
         with BgzfReader(part.path) as r:
             hdr, ref_names, first_vpos = read_bam_header(r)
-            r.seek_virtual(max(part.vstart, first_vpos))
+            blocks = r.blocks(max(part.vstart, first_vpos), part.vend)
+            # without a region filter every framed record is kept, so the
+            # framer can stop at the limit
+            framed_limit = self.limit if part.regions is None else -1
             emitted = 0
-            bufs: list[bytes] = []
-
-            def flush():
-                nonlocal bufs, emitted
-                if not bufs:
-                    return None
-                big = b"".join(bufs)
-                lens = np.fromiter(
-                    (len(b) for b in bufs), dtype=np.int64, count=len(bufs)
-                )
-                starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
+            for big, starts, heads in frame_records(
+                    blocks, "<i", self.batch_size, framed_limit):
                 remaining = self.limit - emitted if self.limit >= 0 else -1
                 batch, got = decode_record_batch(
-                    big, starts, lens, ref_names, self.names, self.tag_defs,
-                    self.coord_offset, part.regions, remaining,
+                    big, starts, heads[:, 0], ref_names, self.names,
+                    self.tag_defs, self.coord_offset, part.regions, remaining,
                     self._arrow_schema,
                 )
-                bufs = []
                 emitted += got
-                return batch
-
-            # without a region filter the kept-row count equals the framed
-            # count, so a limit can stop framing early
-            def frame_cap() -> int:
-                if self.limit < 0 or part.regions is not None:
-                    return self.batch_size
-                return max(1, min(self.batch_size, self.limit - emitted))
-
-            bytes_acc = 0
-            while r.tell_virtual() < part.vend:
-                szb = r.read(4)
-                if len(szb) < 4:
-                    break
-                (block_size,) = struct.unpack("<i", szb)
-                buf = r.read(block_size)
-                if len(buf) < block_size:
-                    break
-                bufs.append(buf)
-                bytes_acc += block_size
-                # flush on bytes as well as record count: a batch_size
-                # batch of long reads (nanopore) could otherwise push a
-                # utf8 column past the int32 Arrow offset range (seq
-                # expands ~2x from packed nibbles)
-                if len(bufs) >= frame_cap() or bytes_acc >= MAX_BATCH_BYTES:
-                    batch = flush()
-                    if batch is not None:
-                        yield batch
-                    bytes_acc = 0
-                    if 0 <= self.limit <= emitted:
-                        return
-            batch = flush()
-            if batch is not None:
-                yield batch
+                if batch is not None:
+                    yield batch
+                if 0 <= self.limit <= emitted:
+                    return
 
 
 class PushdownBamReader(BamReader):
@@ -631,20 +550,14 @@ class BamDataSource(GenomicStreamMixin, DataSource):
         order: list[str] = []
         codes: dict[str, str] = {}
         with BgzfReader(self._require_paths()[0]) as r:
-            _, ref_names, _ = read_bam_header(r)
-            for _ in range(n):
-                szb = r.read(4)
-                if len(szb) < 4:
-                    break
-                (bs,) = struct.unpack("<i", szb)
-                buf = r.read(bs)
-                if len(buf) < bs:
-                    break
-                _, tags = parse_record(buf, ref_names, True)
-                for nm, (code, _v) in (tags or {}).items():
-                    if nm not in codes:
-                        order.append(nm)
-                        codes[nm] = code
+            _, ref_names, first_vpos = read_bam_header(r)
+            for big, starts, heads in frame_records(r.blocks(first_vpos), "<i", n, n):
+                for s, ln in zip(starts.tolist(), heads[:, 0].tolist()):
+                    _, tags = parse_record(big[s:s + ln], ref_names, True)
+                    for nm, (code, _v) in (tags or {}).items():
+                        if nm not in codes:
+                            order.append(nm)
+                            codes[nm] = code
         return [TagDef(nm, codes[nm]) for nm in order]
 
     def schema(self) -> T.StructType:
@@ -672,14 +585,8 @@ def idxstats(path: str, index_path: str | None = None
     with BgzfReader(path) as r:
         hdr, ref_names, _ = read_bam_header(r)
     sizes = dict(hdr.chrom_sizes or {})
-    if index_path:
-        index = (CsiIndex.read(index_path) if index_path.endswith(".csi")
-                 else BaiIndex.read(index_path))
-    elif fsio.exists(path + ".bai"):
-        index = BaiIndex.read(path + ".bai")
-    elif fsio.exists(path + ".csi"):
-        index = CsiIndex.read(path + ".csi")
-    else:
+    index, _ = open_index(index_path, (path + ".bai", path + ".csi"))
+    if index is None:
         raise FileNotFoundError(f"no .bai/.csi index next to {path}")
     stats = index_stats(index)
     out = []

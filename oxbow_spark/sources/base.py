@@ -11,8 +11,9 @@ Python DataSource API (Spark 4.x):
   matching the reference's fragment discipline (D5/D6);
 - uncompressed files split at arbitrary byte offsets and realign to the
   next newline (Hadoop LineRecordReader discipline; ≙ scan_byte_ranges,
-  `oxbow/src/util/query.rs:137-214`); gzip files are one partition each
-  (BGZF-chunked splitting arrives with the binary/index layer);
+  `oxbow/src/util/query.rs:137-214`); tabix-indexed BGZF files split at
+  index-planned virtual-position ranges (``bgzf.plan_ranges``); other
+  gzip files are one partition each;
 - genomic-range predicates (``regions`` option) are applied as residual
   per-record overlap re-checks (`batch_iterator/query.rs:142-159`);
 - rows are emitted as Arrow RecordBatches (columnar, ``batch_size`` rows).
@@ -28,7 +29,6 @@ import gzip
 import io
 import os
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -140,44 +140,23 @@ class LinePartition(InputPartition):
         self.vpos = vpos    # True → start/end are BGZF virtual positions
 
 
-def _iter_vpos_lines(path: str, vstart: int, vend: int) -> Iterator[str]:
-    """Yield lines whose record starts at vpos ∈ [vstart, vend) from a
-    BGZF file (record-aligned chunks from a tabix/linear index)."""
-    from oxbow_spark.sources.bgzf import BgzfReader
-
-    with BgzfReader(path) as r:
-        r.seek_virtual(vstart)
-        while r.tell_virtual() < vend:
-            raw = r.readline()
-            if not raw:
-                return
-            yield raw.decode("utf-8")
-
-
-def _iter_lines(path: str, start: int, end: int) -> Iterator[str]:
-    """Yield complete lines for a byte-range partition.
-
-    Rules (Hadoop line-split discipline): a partition owns every line that
-    *starts* strictly inside (start, end], except the partition at offset 0
-    which also owns the first line. Readers realign by discarding the
-    (possibly partial) line in progress at ``start`` and read one line past
-    ``end`` to finish the last owned line.
-    """
-    if start < 0 or not isinstance(start, int):
-        with open_text(path) as f:
-            yield from f
-        return
-    with fsio.open_binary(path) as f:
-        f.seek(start)
-        if start > 0:
-            f.readline()  # discard partial line owned by previous split
-        pos = f.tell()
-        while pos <= end:
-            raw = f.readline()
-            if not raw:
-                return
-            pos = f.tell()
-            yield raw.decode("utf-8")
+def _owned_lines(blocks) -> bytes:
+    """The bytes of the lines that start before the range's end, from
+    ``(data, owned)`` blocks (`bgzf.BgzfReader.blocks`): through the
+    newline of the last of them."""
+    buf = bytearray()
+    end = None
+    for data, owned in blocks:
+        if end is None and owned is not None:
+            end = len(buf) + owned
+        buf += data
+        if end == 0:
+            return b""
+        if end is not None:
+            nl = buf.find(b"\n", end - 1)
+            if nl >= 0:
+                return bytes(memoryview(buf)[:nl + 1])
+    return bytes(buf)
 
 
 class TextFormatReader(DataSourceReader):
@@ -196,61 +175,18 @@ class TextFormatReader(DataSourceReader):
         self._arrow_schema = to_arrow_schema(codec.schema)
 
     def partitions(self):
-        from oxbow_spark.sources.bgzf import (
-            CsiIndex,
-            TabixIndex,
-            coalesce_chunks,
-            is_bgzf,
-            partition_from_index,
-            query_chunks,
-        )
+        from oxbow_spark.sources.bgzf import is_bgzf, open_index, plan_ranges
 
         parts: list[LinePartition] = []
         for p in self.paths:
             size = fsio.getsize(p)
             index = names = None
             if is_gzip_path(p) and is_bgzf(p):
-                # tabix-indexed BGZF (.tbi, or .csi with tabix aux names):
-                # index-pushed region chunks, or linear-index partitioning
-                # for full scans (SURVEY D1/F1); an explicit `index` option
-                # (reference parity) overrides sidecar discovery
-                explicit = self.index_path
-                if explicit and explicit.endswith(".tbi"):
-                    tbi = TabixIndex.read(explicit)
-                    index, names = tbi.as_bai(), tbi.names
-                elif explicit:
-                    csi = CsiIndex.read(explicit)
-                    if csi.names:
-                        index, names = csi, csi.names
-                elif fsio.exists(p + ".tbi"):
-                    tbi = TabixIndex.read(p + ".tbi")
-                    index, names = tbi.as_bai(), tbi.names
-                elif fsio.exists(p + ".csi"):
-                    csi = CsiIndex.read(p + ".csi")
-                    if csi.names:  # tabix-format aux carries the name list
-                        index, names = csi, csi.names
-            if index is not None:
-                if self.regions:
-                    # pool chunks across (pre-merged) regions and coalesce:
-                    # nearby regions sharing a linear-index chunk must not
-                    # double-read records (_row_passes is a union check)
-                    max_pos = 1 << (
-                        getattr(index, "min_shift", 14) + getattr(index, "depth", 5) * 3
-                    )
-                    chunks: list[tuple[int, int]] = []
-                    for reg in self.regions:
-                        if reg.is_unmapped or reg.name not in names:
-                            continue
-                        rid = names.index(reg.name)
-                        end = reg.end if reg.end is not None else max_pos
-                        chunks.extend(query_chunks(index, rid, reg.start, end))
-                    for cb, ce in coalesce_chunks(chunks):
-                        parts.append(LinePartition(p, cb, ce, vpos=True))
-                else:
-                    for vs, ve in partition_from_index(
-                        index, self.partition_bytes, 0, size
-                    ):
-                        parts.append(LinePartition(p, vs, ve, vpos=True))
+                # tabix-indexed BGZF: .tbi, or .csi with tabix aux names
+                index, names = open_index(self.index_path, (p + ".tbi", p + ".csi"))
+            if names:
+                parts.extend(LinePartition(p, vs, ve, vpos=True) for vs, ve in plan_ranges(
+                    index, names, self.regions, self.partition_bytes, 0, size))
             elif is_gzip_path(p) or size <= self.partition_bytes:
                 parts.append(LinePartition(p))
             else:
@@ -298,12 +234,17 @@ class TextFormatReader(DataSourceReader):
     # ---- vectorized fast path (codecs may implement parse_table) -------
 
     def _partition_bytes(self, partition: LinePartition) -> bytes:
-        """Raw bytes of the lines owned by this partition (same ownership
-        rules as `_iter_lines`/`_iter_vpos_lines`)."""
-        if getattr(partition, "vpos", False):
-            return "".join(
-                _iter_vpos_lines(partition.path, partition.start, partition.end)
-            ).encode("utf-8")
+        """Raw bytes of the lines this partition owns. A vpos partition
+        owns the lines that start in its virtual-position range. A byte
+        range owns the lines that start in (start, end], and the range at
+        offset 0 the first line too (Hadoop line-split discipline): it
+        drops the partial line at ``start`` and reads past ``end`` to
+        finish its last line."""
+        if partition.vpos:
+            from oxbow_spark.sources.bgzf import BgzfReader
+
+            with BgzfReader(partition.path) as r:
+                return _owned_lines(r.blocks(partition.start, partition.end))
         if partition.start < 0:
             raw = fsio.open_binary(partition.path)
             if is_gzip_path(partition.path):
@@ -381,24 +322,18 @@ class TextFormatReader(DataSourceReader):
 
     def read(self, partition: LinePartition):
         codec = self.codec
+        data = self._partition_bytes(partition)
         parse_table = getattr(codec, "parse_table", None)
-        if parse_table is not None:
-            table = parse_table(self._partition_bytes(partition))
-            if table is not None:
-                yield from self._emit_fast(table)
-                return
+        table = parse_table(data) if parse_table is not None else None
+        if table is not None:
+            yield from self._emit_fast(table)
+            return
         off = codec.coord_offset
         starts = codec.start_field_indexes
         rows: list[list] = []
         n = 0
         at_top = partition.start <= 0
-        if getattr(partition, "vpos", False):
-            lines = _iter_vpos_lines(partition.path, partition.start, partition.end)
-        else:
-            lines = _iter_lines(partition.path, partition.start, partition.end)
-        for line in lines:
-            if line.endswith("\n"):
-                line = line[:-1]
+        for line in data.decode("utf-8").split("\n"):
             if not line:
                 continue
             if codec.meta_anywhere or at_top:

@@ -36,8 +36,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from oxbow_spark.models.vcf_header import VcfHeader
 from oxbow_spark.sources.bam import _gather_ranges, _utf8_array
 from oxbow_spark.sources.base import DEFAULT_BATCH_SIZE
-from oxbow_spark.sources.bgzf import BgzfReader
-from oxbow_spark.sources.vcf import VcfCodec, VcfDataSource, _split_semantic
+from oxbow_spark.sources.bgzf import BgzfReader, frame_records, open_index, plan_ranges
+from oxbow_spark.sources.vcf import VcfCodec, VcfDataSource, _null_if, _split_semantic
 
 from oxbow_spark.sources import fsio
 
@@ -250,9 +250,9 @@ def _column(c: _Cells, si: int, typ: pa.DataType, fmt: bool) -> pa.Array:
     """Cell ``si`` of every record (a sample; 0 for INFO) as an Arrow
     column of ``typ``, under the VCF text rules: an absent, empty or '.'
     cell is null, and so is an all-MISSING FORMAT cell; a scalar takes the
-    first value; a list-Number string splits on ','; GT (the struct type)
-    unpacks ``(allele + 1) << 1 | phased``, with 0 and MISSING a null
-    allele that is not phased."""
+    first value; a list-Number string splits on ',' with '.' and empty
+    elements null; GT (the struct type) unpacks ``(allele + 1) << 1 |
+    phased``, with 0 and MISSING a null allele that is not phased."""
     cell = np.where(c.reps > si, c.base + si, -1)
     ln, st = c.length[cell], c.start[cell]
     is_list = pa.types.is_list(typ)
@@ -270,7 +270,12 @@ def _column(c: _Cells, si: int, typ: pa.DataType, fmt: bool) -> pa.Array:
     lens = np.where(null, 0, ln)
     if pa.types.is_string(vt):
         col = _ascii_array(lens, c.chars[_spans(st, lens)], null)
-        return pc.split_pattern(col, ",").cast(typ) if is_list else col
+        if not is_list:
+            return col
+        lists = pc.split_pattern(col, ",")
+        return pa.ListArray.from_arrays(
+            lists.offsets, _null_if(lists.values, ".", ""), mask=pa.array(null)
+        ).cast(typ)
     if not is_list and not pa.types.is_struct(typ):
         return pa.array(c.nums[st].astype(vt.to_pandas_dtype()), mask=null | c.nmiss[st])
     idx = _spans(st, lens)
@@ -514,26 +519,15 @@ def read_bcf_header(r: BgzfReader) -> tuple[VcfHeader, list[str], list[str]]:
     return hdr, string_dictionary(lines), contig_dictionary(lines)
 
 
-class _RawReader:
-    """Plain-file stand-in for BgzfReader (uncompressed BCF)."""
-
-    def __init__(self, path: str):
-        self.f = fsio.open_binary(path)
-
-    def read(self, n: int) -> bytes:
-        return self.f.read(n)
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.f.close()
-
-
 def open_bcf(path: str):
-    with fsio.open_binary(path) as f:
-        magic = f.read(3)
-    return _RawReader(path) if magic == b"BCF" else BgzfReader(path)
+    """A reader of the BCF file: BgzfReader, or the plain file when the
+    BCF is uncompressed."""
+    f = fsio.open_binary(path)
+    if f.read(3) == b"BCF":
+        f.seek(0)
+        return f
+    f.close()
+    return BgzfReader(path)
 
 
 class BcfPartition(InputPartition):
@@ -566,108 +560,56 @@ class BcfReader(DataSourceReader):
     def partitions(self):
         """CSI-pushed planning (SURVEY F1/D1 for BCF): with a .csi index,
         region queries prune to index chunks and full scans split into
-        ~chunksize vpos ranges; without one, one partition per file with
-        residual-only filtering (the pre-CSI behavior)."""
-        from oxbow_spark.sources.bgzf import (
-            CsiIndex,
-            coalesce_chunks,
-            partition_from_index,
-            query_chunks,
-        )
-
+        ~chunksize vpos ranges; uncompressed or index-less input is one
+        whole-file partition with residual-only filtering."""
         parts: list[BcfPartition] = []
         for p in self.paths:
-            csi_path = self.index_path or p + ".csi"
-            with fsio.open_binary(p) as f:
-                raw = f.read(3) == b"BCF"  # uncompressed BCF: not splittable
-            if raw or not fsio.exists(csi_path):
+            with open_bcf(p) as r:
+                index = None  # uncompressed BCF is not splittable
+                if isinstance(r, BgzfReader):
+                    index = open_index(self.index_path, (p + ".csi",))[0]
+                if index is not None:
+                    _hdr, _strings, contigs = read_bcf_header(r)
+                    first_vpos = r.tell_virtual()
+            if index is None:
                 parts.append(BcfPartition(p))
                 continue
-            idx = CsiIndex.read(csi_path)
-            with open_bcf(p) as r:
-                _hdr, _strings, contigs = read_bcf_header(r)
-                first_vpos = r.tell_virtual()
-            if self.regions:
-                max_pos = 1 << (idx.min_shift + idx.depth * 3)
-                chunks: list[tuple[int, int]] = []
-                for reg in self.regions:
-                    if reg.is_unmapped or reg.name not in contigs:
-                        continue
-                    rid = contigs.index(reg.name)
-                    end = reg.end if reg.end is not None else max_pos
-                    chunks.extend(query_chunks(idx, rid, reg.start, end))
-                for cb, ce in coalesce_chunks(chunks):
-                    parts.append(BcfPartition(p, cb, ce))
-            else:
-                size = fsio.getsize(p)
-                for vs, ve in partition_from_index(idx, self.chunksize, first_vpos, size):
-                    parts.append(BcfPartition(p, vs, ve))
+            parts.extend(BcfPartition(p, vs, ve) for vs, ve in plan_ranges(
+                index, contigs, self.regions, self.chunksize, first_vpos,
+                fsio.getsize(p)))
         return parts or [BcfPartition(self.paths[0], 0, 0)]
 
     def _empty(self) -> pa.RecordBatch:
         return pa.RecordBatch.from_pylist([], schema=self._arrow_schema)
 
     def read(self, part: BcfPartition):
-        ranged = getattr(part, "vstart", -1) >= 0
+        ranged = part.vstart >= 0
         if ranged and part.vstart >= part.vend:
             yield self._empty()
             return
         with open_bcf(part.path) as r:
             _hdr, strings, contigs = read_bcf_header(r)
-            if ranged:
-                r.seek_virtual(max(part.vstart, r.tell_virtual()))
-            c = self.codec
-            bodies: list[bytes] = []
-            slens: list[int] = []
+            if isinstance(r, BgzfReader):
+                blocks = r.blocks(max(part.vstart, r.tell_virtual()),
+                                  part.vend if ranged else None)
+            else:
+                blocks = ((b, None) for b in iter(lambda: r.read(1 << 20), b""))
+            # without a region filter every framed record is kept, so the
+            # framer can stop at the limit
+            framed_limit = -1 if self.regions else self.limit
             emitted = 0
-
-            def flush():
-                nonlocal bodies, slens, emitted
-                if not bodies:
-                    return None
-                big = b"".join(bodies)
-                lens = np.fromiter(
-                    (len(s) for s in bodies), dtype=np.int64, count=len(bodies)
-                )
-                starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-                s_lens = np.asarray(slens, dtype=np.int64)
+            for big, starts, heads in frame_records(
+                    blocks, "<II", self.batch_size, framed_limit):
                 remaining = self.limit - emitted if self.limit >= 0 else -1
                 batch, got = decode_bcf_batch(
-                    big, starts, s_lens, c, strings, contigs,
+                    big, starts, heads[:, 0], self.codec, strings, contigs,
                     self._arrow_schema, self.regions, remaining,
                 )
-                bodies, slens = [], []
                 emitted += got
-                return batch
-
-            def frame_cap() -> int:
-                # without a region filter every framed record is kept, so
-                # a limit can stop framing early
-                if self.limit < 0 or self.regions:
-                    return self.batch_size
-                return max(1, min(self.batch_size, self.limit - emitted))
-
-            while True:
-                if ranged and r.tell_virtual() >= part.vend:
+                if batch is not None:
+                    yield batch
+                if 0 <= self.limit <= emitted:
                     break
-                head = r.read(8)
-                if len(head) < 8:
-                    break
-                l_shared, l_indiv = struct.unpack("<II", head)
-                body = r.read(l_shared + l_indiv)
-                if len(body) < l_shared + l_indiv:
-                    break
-                bodies.append(body)
-                slens.append(l_shared)
-                if len(bodies) >= frame_cap():
-                    batch = flush()
-                    if batch is not None:
-                        yield batch
-                    if 0 <= self.limit <= emitted:
-                        return
-            batch = flush()
-            if batch is not None:
-                yield batch
             if emitted == 0:
                 yield self._empty()
 

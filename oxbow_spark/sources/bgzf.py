@@ -1,16 +1,21 @@
-"""BGZF block-compressed I/O + BAI/CSI-style binning index structures.
+"""BGZF block-compressed I/O, BAI/TBI/CSI binning indexes, and the one
+indexed-BGZF read path that the BAM, BCF and tabix text readers share.
 
 Implemented from the public SAM/BAM/tabix specifications
 (https://samtools.github.io/hts-specs/SAMv1.pdf §4). Parity targets:
 
-- virtual positions ``(coffset << 16) | uoffset`` and record-aligned
-  range scans (reference ``BgzfChunkReader``, `oxbow/src/util/query.rs:46-114`);
-- ``partition_from_index(index, chunksize)``: linear-index offsets →
-  deduped, sorted, pruned-to-chunksize virtual-position cut points — the
-  shuffle-less partition planner (reference `oxbow/src/util/index.rs:119-178`,
-  SURVEY D1);
-- BAI bin query with linear-index lower bound and chunk merging
-  (reference `alignment/scanner/bam.rs:186-199`).
+- virtual positions ``(coffset << 16) | uoffset``;
+- the planner: ``open_index`` finds a file's .bai/.tbi/.csi, and
+  ``plan_ranges`` turns it into partition ranges — pooled, coalesced
+  ``query_chunks`` for regions, ``partition_from_index`` cuts (linear-index
+  offsets pruned to ~chunksize compressed bytes) for a full scan; the twin
+  of the reference's shuffle-less planner (`oxbow/src/util/index.rs:119-178`,
+  SURVEY D1) and its BAI bin query (`alignment/scanner/bam.rs:186-199`);
+- the framer: ``BgzfReader.blocks`` inflates a partition's blocks from
+  ``vstart`` and marks which bytes lie before ``vend``, and
+  ``frame_records`` cuts length-prefixed records out of them in batches;
+  the twin of the reference's record-aligned ``BgzfChunkReader``
+  (`oxbow/src/util/query.rs:46-114`).
 """
 
 from __future__ import annotations
@@ -20,7 +25,15 @@ import struct
 import zlib
 from dataclasses import dataclass
 
+import numpy as np
+
 from oxbow_spark.sources import fsio
+
+# A framed batch closes at this many bytes as well as at ``batch_size``
+# records: BAM seq expands ~2x from packed nibbles, so 256 MiB of records
+# keeps every utf8 column well inside the int32 Arrow offset range (2 GiB)
+# even for ultra-long reads.
+MAX_BATCH_BYTES = 256 * 1024 * 1024
 
 
 class BgzfReader:
@@ -90,27 +103,27 @@ class BgzfReader:
             return self._next_coffset << 16
         return (self._block_coffset << 16) | self._uoffset
 
-    def readline(self) -> bytes:
-        """Read one \\n-terminated line (crossing block boundaries);
-        b'' at EOF. ``tell_virtual()`` before the call gives the line's
-        virtual position."""
-        out = []
-        while True:
-            if self._block_coffset < 0:
-                self._load_block(0)
-            if self._uoffset >= len(self._block_data):
-                nxt = self._next_coffset
-                self._load_block(nxt)
-                self._uoffset = 0
-                if not self._block_data:
-                    return b"".join(out)
-            nl = self._block_data.find(b"\n", self._uoffset)
-            if nl >= 0:
-                out.append(self._block_data[self._uoffset:nl + 1])
-                self._uoffset = nl + 1
-                return b"".join(out)
-            out.append(self._block_data[self._uoffset:])
-            self._uoffset = len(self._block_data)
+    def blocks(self, vstart: int, vend: int | None = None):
+        """Inflated blocks from ``vstart`` on, as ``(data, owned)``; the
+        first block's data starts at vstart's uoffset. ``owned`` is None
+        while the whole block lies before ``vend``. The block that holds
+        ``vend`` (or the first one past it) gives how many of its bytes lie
+        before it, and every later block 0: blocks go on past ``vend`` so
+        that a record starting before it can be read to its end. Ends at
+        the end of the file."""
+        self.seek_virtual(vstart)
+        skip, past = self._uoffset, False
+        while self._next_coffset > self._block_coffset:  # not at EOF
+            data, owned = self._block_data, None
+            if past:
+                owned = 0
+            elif vend is not None and self._block_coffset >= vend >> 16:
+                past, owned = True, 0
+                if self._block_coffset == vend >> 16:
+                    owned = max(0, min(vend & 0xFFFF, len(data)) - skip)
+            yield (data[skip:] if skip else data), owned
+            skip = 0
+            self._load_block(self._next_coffset)
 
     def read(self, n: int) -> bytes:
         out = []
@@ -438,3 +451,107 @@ def partition_from_index(
         for i in range(len(bounds) - 1)
         if bounds[i] < bounds[i + 1]
     ]
+
+
+# ------------------------------------------------- planner and framer
+
+
+def open_index(explicit: str | None, sidecars) -> tuple:
+    """``(index, names)`` of a data file: its ``index`` option when given
+    (reference parity), else the first of ``sidecars`` that exists, read
+    by extension (.tbi, .csi, else BAI). ``names`` are the tabix sequence
+    names: None for BAI and for a CSI without tabix aux data. ``(None,
+    None)`` when there is no index."""
+    path = explicit or next((p for p in sidecars if fsio.exists(p)), None)
+    if path is None:
+        return None, None
+    if path.endswith(".tbi"):
+        tbi = TabixIndex.read(path)
+        return tbi.as_bai(), tbi.names
+    if path.endswith(".csi"):
+        csi = CsiIndex.read(path)
+        return csi, csi.names
+    return BaiIndex.read(path), None
+
+
+def plan_ranges(index, names: list[str], regions, chunksize: int,
+                start_vpos: int, file_size: int) -> list[tuple[int, int]]:
+    """Half-open virtual-position ranges that partition an indexed BGZF
+    file. With ``regions`` (pre-merged, `coords.merge_regions`): the index
+    chunks of every region on a sequence in ``names`` pooled and coalesced,
+    so a record that overlaps two regions, or sits in a chunk that two
+    regions share, is read once; the unmapped ``*`` gets none. Without: the
+    file from ``start_vpos`` cut at linear-index offsets about
+    ``chunksize`` compressed bytes apart."""
+    if not regions:
+        return partition_from_index(index, chunksize, start_vpos, file_size)
+    max_pos = 1 << (getattr(index, "min_shift", 14) + getattr(index, "depth", 5) * 3)
+    chunks: list[tuple[int, int]] = []
+    for reg in regions:
+        if reg.is_unmapped or reg.name not in names:
+            continue
+        end = reg.end if reg.end is not None else max_pos
+        chunks.extend(query_chunks(index, names.index(reg.name), reg.start, end))
+    return coalesce_chunks(chunks)
+
+
+def frame_records(blocks, head: str, batch_size: int, limit: int = -1):
+    """Length-prefixed records cut out of ``(data, owned)`` blocks
+    (`BgzfReader.blocks`), in batches ``(buf, body_starts, head_fields)``.
+
+    A record is a ``head`` struct whose fields sum to its body length
+    (``<i`` for BAM, ``<II`` for BCF) and is framed when it starts before
+    the range's end. ``body_starts`` index ``buf``; ``head_fields`` is an
+    (n, fields) int64 array. A batch closes at ``batch_size`` records or
+    at ``MAX_BATCH_BYTES``; ``limit`` >= 0 stops after that many records.
+    A record cut short by the end of the file is dropped; a negative
+    length raises ValueError."""
+    if limit == 0:
+        return
+    rec = struct.Struct(head)
+    unpack, hs = rec.unpack_from, rec.size
+    nf = len(rec.unpack(bytes(hs)))
+    max_bytes = MAX_BATCH_BYTES
+    buf = bytearray()
+    end = None  # offset in buf of the range's end, once a block shows it
+    pos = framed = 0
+    starts: list[int] = []
+    fields: list[int] = []
+    cap = batch_size if limit < 0 else min(batch_size, limit)
+
+    def batch():
+        return (bytes(memoryview(buf)[:pos]), np.array(starts, dtype=np.int64),
+                np.array(fields, dtype=np.int64).reshape(-1, nf))
+
+    for data, owned in blocks:
+        if end is None and owned is not None:
+            end = len(buf) + owned
+        buf += data
+        n = len(buf)
+        stop = n if end is None else min(end, n)  # a record starts before it
+        while pos < stop and pos + hs <= n:
+            f = unpack(buf, pos)
+            nxt = pos + hs + sum(f)
+            if nxt < pos + hs:
+                raise ValueError(f"negative record length {f} in a BGZF record stream")
+            if nxt > n:
+                break
+            starts.append(pos + hs)
+            fields.extend(f)
+            pos = nxt
+            if len(starts) >= cap or pos >= max_bytes:
+                yield batch()
+                framed += len(starts)
+                if 0 <= limit <= framed:
+                    return
+                if limit >= 0:
+                    cap = min(batch_size, limit - framed)
+                del buf[:pos]
+                n, stop = n - pos, stop - pos
+                if end is not None:
+                    end -= pos
+                pos, starts, fields = 0, [], []
+        if end is not None and pos >= end:
+            break
+    if starts:
+        yield batch()

@@ -117,6 +117,11 @@ def decode_gt(vals: list[int | None]) -> dict | None:
     return {"allele": alleles, "phased": phased}
 
 
+def _split_list(s: str) -> list:
+    """A list-Number String value: '.' and empty elements are null."""
+    return [None if v in (".", "") else v for v in s.split(",")]
+
+
 def _coerce_info(d, cell):
     """(kind, vals) from the wire → the VCF-text-equivalent python value."""
     if d is None or cell is None:
@@ -128,7 +133,7 @@ def _coerce_info(d, cell):
         s = vals.rstrip("\x00")
         if not s or s == ".":
             return None
-        return s if d.is_scalar else s.split(",")
+        return s if d.is_scalar else _split_list(s)
     if not vals:
         return None
     if d.is_scalar:
@@ -145,7 +150,7 @@ def _coerce_fmt(d, cell):
         s = vals.rstrip("\x00")
         if not s or s == ".":
             return None
-        return s if d.is_scalar else s.split(",")
+        return s if d.is_scalar else _split_list(s)
     if not vals or all(v is None for v in vals):
         return None
     if d.is_scalar:

@@ -68,7 +68,7 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from oxbow_spark.session import get_spark
 
-    s = get_spark("oxbow_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("oxbow_spark_tests")
     yield s
 
 

@@ -105,16 +105,17 @@ class _Bgzf:
     """A BGZF stream of a header (own blocks, as htslib writes a BAM or
     BCF header) and a body, and the virtual offset of any body byte."""
 
-    def __init__(self, header: bytes, body: bytes):
-        self.blocks = [bgzf_block(part[i:i + _BLOCK]) for part in (header, body)
-                       for i in range(0, len(part), _BLOCK)]
+    def __init__(self, header: bytes, body: bytes, block: int = _BLOCK):
+        self.block = block
+        self.blocks = [bgzf_block(part[i:i + block]) for part in (header, body)
+                       for i in range(0, len(part), block)]
         sizes = [len(b) for b in self.blocks]
-        n_head = -(-len(header) // _BLOCK)
+        n_head = -(-len(header) // block)
         self._coff = np.cumsum([0] + sizes)[n_head:].tolist()
 
     def voffset(self, u: int) -> int:
-        k = min(u // _BLOCK, len(self._coff) - 1)
-        return (self._coff[k] << 16) | (u - k * _BLOCK)
+        k = min(u // self.block, len(self._coff) - 1)
+        return (self._coff[k] << 16) | (u - k * self.block)
 
     def offsets(self, records: list[bytes]) -> tuple[list[int], list[int]]:
         """Start and end virtual offsets of body records laid end to end."""
@@ -199,11 +200,12 @@ def write_bgzf(path: str, data: bytes, block: int) -> None:
         struct.pack("<QQ", c, u) for c, u in entries))
 
 
-def _indexed_text(path, header: str, lines: list[str], tids, begs, ends):
+def _indexed_text(path, header: str, lines: list[str], tids, begs, ends,
+                  block: int):
     """Write a bgzipped text file; return its per-line index."""
     head = header.encode()
     recs = [ln.encode() for ln in lines]
-    stream = _Bgzf(b"", head + b"".join(recs))
+    stream = _Bgzf(b"", head + b"".join(recs), block)
     vs, ve = stream.offsets([head] + recs)
     _write(path, stream.data())
     return _indexes(tids, begs, ends, vs[1:], ve[1:])
@@ -507,7 +509,7 @@ def _bam_record(r: _Read) -> bytes:
     return struct.pack("<i", len(body)) + body
 
 
-def _write_alignments(d: str, reads: list[_Read]) -> None:
+def _write_alignments(d: str, reads: list[_Read], block: int) -> None:
     hdr = _sam_header()
     _write(f"{d}/sample.sam", hdr + "".join(_sam_line(r) for r in reads))
     text = hdr.encode()
@@ -516,7 +518,7 @@ def _write_alignments(d: str, reads: list[_Read]) -> None:
             + b"".join(struct.pack("<i", len(c) + 1) + c.encode() + b"\x00"
                        + struct.pack("<i", ln) for c, ln in CONTIGS))
     recs = [_bam_record(r) for r in reads]
-    stream = _Bgzf(head, b"".join(recs))
+    stream = _Bgzf(head, b"".join(recs), block)
     vs, ve = stream.offsets(recs)
     data = stream.data()
     _write(f"{d}/sample.bam", data)
@@ -772,21 +774,22 @@ def _bcf_record(v: _Variant) -> bytes:
     return struct.pack("<II", len(shared), len(indiv)) + bytes(shared) + bytes(indiv)
 
 
-def _write_variants(d: str, variants: list[_Variant]) -> None:
+def _write_variants(d: str, variants: list[_Variant], block: int) -> None:
     hdr = _vcf_header()
     lines = [_vcf_line(v) for v in variants]
     _write(f"{d}/sample.vcf", hdr + "".join(lines))
     tids = [v.tid for v in variants]
     begs = [v.pos - 1 for v in variants]
     ends = [v.pos - 1 + v.rlen for v in variants]
-    refs = _indexed_text(f"{d}/sample.vcf.gz", hdr, lines, tids, begs, ends)
+    refs = _indexed_text(f"{d}/sample.vcf.gz", hdr, lines, tids, begs, ends,
+                         block)
     vcf_conf = _tabix_conf(2, (1, 2, 0))        # tabix's VCF preset
     _write(f"{d}/sample.vcf.gz.tbi", _tbi(refs, vcf_conf))
     _write(f"{d}/sample.vcf.gz.csi", _csi(refs, vcf_conf))
     text = hdr.encode() + b"\x00"
     recs = [_bcf_record(v) for v in variants]
     stream = _Bgzf(b"BCF\x02\x02" + struct.pack("<I", len(text)) + text,
-                   b"".join(recs))
+                   b"".join(recs), block)
     _write(f"{d}/sample.bcf", stream.data())
     _write(f"{d}/sample.bcf.csi",
            _csi(_indexes(tids, begs, ends, *stream.offsets(recs))))
@@ -795,7 +798,7 @@ def _write_variants(d: str, variants: list[_Variant]) -> None:
 # -------------------------------------------------------------- features
 
 
-def _write_bed(d: str, rng) -> None:
+def _write_bed(d: str, rng, block: int) -> None:
     """FIXTURES.md T3: BED9+2 (narrowPeak-like signalValue, pValue)."""
     lines, tids, begs, ends = [], [], [], []
     n = 0
@@ -820,7 +823,8 @@ def _write_bed(d: str, rng) -> None:
     hdr = "#chrom\tstart\tend\tname\tscore\tstrand\tthickStart\tthickEnd" \
           "\titemRgb\tsignalValue\tpValue\n"
     _write(f"{d}/sample.bed", hdr + "".join(lines))
-    refs = _indexed_text(f"{d}/sample.bed.gz", hdr, lines, tids, begs, ends)
+    refs = _indexed_text(f"{d}/sample.bed.gz", hdr, lines, tids, begs, ends,
+                         block)
     _write(f"{d}/sample.bed.gz.tbi", _tbi(refs, _tabix_conf(0x10000, (1, 2, 3))))
 
 
@@ -935,15 +939,17 @@ def _write_sequences(d: str, ref: dict[str, str]) -> None:
     write_bgzf(f"{d}/sample.fasta.gz", text, _BLOCK)
 
 
-def write_corpus(out_dir: str) -> None:
-    """Write the FIXTURES.md corpus into ``out_dir``."""
+def write_corpus(out_dir: str, block: int = _BLOCK) -> None:
+    """Write the FIXTURES.md corpus into ``out_dir``. ``block`` is the
+    BGZF payload per block of the indexed BAM, BCF, VCF.gz and BED.gz; a
+    small one makes records and lines cross block boundaries often."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(SEED)
     ref = _reference(rng)
     _write_sequences(out_dir, ref)
-    _write_alignments(out_dir, _alignments(rng, ref))
-    _write_variants(out_dir, _variants(rng, ref))
-    _write_bed(out_dir, rng)
+    _write_alignments(out_dir, _alignments(rng, ref), block)
+    _write_variants(out_dir, _variants(rng, ref), block)
+    _write_bed(out_dir, rng, block)
     _write_gxf(out_dir, rng)
 
 

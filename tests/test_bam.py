@@ -178,6 +178,7 @@ def test_bam_byte_based_flush(monkeypatch):
     import pyarrow as pa
 
     from oxbow_spark.sources import bam as bam_mod
+    from oxbow_spark.sources import bgzf
 
     def scan():
         src = bam_mod.BamDataSource({"path": BAM})
@@ -188,7 +189,7 @@ def test_bam_byte_based_flush(monkeypatch):
         return batches
 
     whole = pa.Table.from_batches(scan())
-    monkeypatch.setattr(bam_mod, "MAX_BATCH_BYTES", 2048)
+    monkeypatch.setattr(bgzf, "MAX_BATCH_BYTES", 2048)
     chunked = scan()
     assert len(chunked) > len(whole.to_batches())
     assert pa.Table.from_batches(chunked).equals(whole)

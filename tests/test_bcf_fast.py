@@ -222,6 +222,35 @@ def test_string_format_cells_match_vcf_text(tmp_path):
     assert [r["FT"] for r in got.column("s1").to_pylist()] == ["PASS", "q10", "LowQual"]
 
 
+def test_string_list_dot_elements_match_vcf_text(tmp_path):
+    """A '.' or empty element of a list-Number String value is null in
+    BCF, as in VCF text: TAGS=a,. reads ['a', None]. A whole '.' value
+    is a null list."""
+    meta = ['##INFO=<ID=TAGS,Number=.,Type=String,Description="tags">',
+            '##FORMAT=<ID=GT,Number=1,Type=String,Description="genotype">',
+            '##FORMAT=<ID=FL,Number=.,Type=String,Description="flags">']
+    vals = [("a,.", "x,.", ".,y"), ("a,,b", "p", "q,,r"), ("b", ".", "z")]
+    recs, lines = [], []
+    for i, (tags, a, b) in enumerate(vals):
+        recs.append(encoded_record(
+            0, 100 * i, "A", ["T"], [(1, typed_str(tags))],
+            [(2, i8_cells([[2, 4], [4, 5]], 2)), (3, str_cells([a, b]))], 2))
+        lines.append(f"chr1\t{100 * i + 1}\t.\tA\tT\t.\tPASS\tTAGS={tags}\t"
+                     f"GT:FL\t0/1:{a}\t1|1:{b}\n")
+    bcf, vcf = str(tmp_path / "fl.bcf"), tmp_path / "fl.vcf"
+    write_bcf_records(bcf, _header(meta), recs)
+    vcf.write_text(_header(meta) + "".join(lines))
+    got = _scan(bcf, {})
+    assert got.equals(_scan(str(vcf), {}, fmt="vcf"))
+    assert got.equals(bcf_reference.read_table(bcf, {}))
+    assert [r["TAGS"] for r in got.column("info").to_pylist()] == [
+        ["a", None], ["a", None, "b"], ["b"]]
+    assert [r["FL"] for r in got.column("s1").to_pylist()] == [
+        ["x", None], ["p"], None]
+    assert [r["FL"] for r in got.column("s2").to_pylist()] == [
+        [None, "y"], ["q", None, "r"], ["z"]]
+
+
 @pytest.mark.parametrize("opts", [
     {},
     {"samples_nested": "true"},

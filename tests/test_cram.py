@@ -4,6 +4,7 @@ region/projection/coords options, and the rANS 4x8 codec."""
 
 from __future__ import annotations
 
+import os
 import struct
 
 import pytest
@@ -126,9 +127,32 @@ def test_cram31_external_reference(gspark):
     assert len(cram) == 5
 
 
-def test_cram31_without_reference_raises(gspark):
-    with pytest.raises(Exception, match="reference"):
-        gspark.read.format("cram").load(f"{FIX}/sample-ref.cram").collect()
+def _reference_based_cram31(gspark, out: str) -> str:
+    """A CRAM 3.1 written with ``reference=`` (RR=1, no embedded
+    reference) from the generated corpus's BAM."""
+    import glob
+
+    from tests.corpus import generated_dir
+
+    d = generated_dir()
+    with open(f"{d}/sample.sam") as f:
+        header = "".join(ln for ln in f if ln.startswith("@"))
+    (gspark.read.format("bam").load(f"{d}/sample.bam").limit(50).coalesce(1)
+     .write.format("cram").option("header", header)
+     .option("reference", f"{d}/sample.fasta").option("version", "3.1")
+     .mode("overwrite").save(out))
+    return glob.glob(f"{out}/*.cram")[0]
+
+
+def test_cram31_without_reference_raises(gspark, tmp_path):
+    """A reference-based CRAM 3.1 read without its FASTA fails in the
+    decoder: the checkout's htslib file where it exists, else one this
+    repository's writer made."""
+    path = f"{FIX}/sample-ref.cram"
+    if not os.path.isdir(CHECKOUT):
+        path = _reference_based_cram31(gspark, str(tmp_path / "ref31"))
+    with pytest.raises(Exception, match="requires reference bases"):
+        gspark.read.format("cram").load(path).collect()
 
 
 def test_rans_nx16_pack_cat():
