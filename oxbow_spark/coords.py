@@ -24,8 +24,11 @@ whole-stage codegen.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -65,17 +68,20 @@ def _parse_number(s: str) -> int:
     return int(cleaned)
 
 
-@dataclass(frozen=True)
-class Region:
+class Region(NamedTuple):
     """A query region; coordinates stored 0-based half-open.
 
     ``end is None`` means "to the end of the sequence"; ``name == '*'``
-    selects unmapped records.
+    selects unmapped records. A tuple, so partitions ship it compactly
+    and print it as one (just ``('*',)`` for the unmapped selector).
     """
 
     name: str
     start: int = 0
     end: int | None = None
+
+    def __repr__(self) -> str:
+        return repr((self.name,) if self.is_unmapped else tuple(self))
 
     @property
     def is_unmapped(self) -> bool:
@@ -130,8 +136,8 @@ class Region:
         return (self.name, self.start + 1, self.end)
 
     def overlaps(self, start: int, end: int) -> bool:
-        """Half-open interval overlap (the residual re-check predicate,
-        reference `alignment/scanner/batch_iterator/query.rs:142-159`)."""
+        """Half-open interval overlap of one record, the scalar form of
+        :func:`region_mask`."""
         if self.end is not None and start >= self.end:
             return False
         return end > self.start
@@ -186,36 +192,42 @@ def merge_regions(regions: list[Region]) -> list[Region]:
     return out
 
 
-def residual_entries(regions: list[Region]) -> tuple:
-    """Regions → picklable residual-check entries shipped in partitions:
-    ``("*",)`` for the unmapped selector, else ``(name, start0, end0)``."""
-    return tuple(
-        ("*",) if r.is_unmapped else (r.name, r.start, r.end) for r in regions
-    )
+def _int_column(values) -> pa.Array:
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    if not isinstance(values, pa.Array):
+        return pa.array(values, pa.int64())
+    return values.cast(pa.int64())
 
 
-def alignment_record_passes(
-    entries: tuple, rname: str | None, pos1: int | None, end1: int | None
-) -> bool:
-    """Union residual re-check for an alignment record against merged
-    region entries (1-based inclusive record coords, as SAM emits them).
-    Each record is checked against the whole union exactly once, so
-    multi-region scans cannot double-count."""
-    for e in entries:
-        if e[0] == "*":
-            if rname is None:
-                return True
-            continue
-        nm, s0, e0 = e
-        if rname != nm or pos1 is None:
-            continue
-        rec_end = end1 if end1 is not None else pos1
-        if e0 is not None and pos1 - 1 >= e0:
-            continue
-        if rec_end <= s0:
-            continue
-        return True
-    return False
+def region_mask(regions, chrom, start0, end0) -> np.ndarray:
+    """Which records overlap some region of ``regions`` (pre-merged,
+    :func:`merge_regions`): the one residual check every reader applies
+    after its index query (reference `batch_iterator/query.rs:142-159`),
+    over a whole batch at once.
+
+    ``chrom``, ``start0`` and ``end0`` are equal-length arrays of 0-based
+    half-open record intervals (Arrow, numpy or lists; Arrow nulls or
+    None for missing). A null ``chrom`` matches only ``*``; a null start
+    matches no named region; a null end means ``start0 + 1``. Each record
+    is checked against the whole union once, so a record overlapping two
+    regions is kept once."""
+    if isinstance(chrom, pa.ChunkedArray):
+        chrom = chrom.combine_chunks()
+    elif not isinstance(chrom, pa.Array):
+        chrom = pa.array(chrom, pa.string())
+    start0 = _int_column(start0)
+    end0 = pc.coalesce(_int_column(end0), pc.add(start0, 1))
+    hit = pa.array(np.zeros(len(chrom), dtype=bool))
+    for r in regions:
+        if r.is_unmapped:
+            m = pc.is_null(chrom)
+        else:
+            m = pc.and_(pc.equal(chrom, r.name), pc.greater(end0, r.start))
+            m = pc.and_(m, pc.is_valid(start0) if r.end is None
+                        else pc.less(start0, r.end))
+        hit = pc.or_(hit, pc.fill_null(m, False))
+    return hit.to_numpy(zero_copy_only=False)
 
 
 # ----------------------------------------------------------------- Spark side
@@ -243,15 +255,3 @@ def convert_starts(
     for c in start_cols:
         out = out.withColumn(c, F.col(c) + F.lit(off))
     return out
-
-
-def region_filter(region: Region, chrom_col: str, start_col: str, end_col: str) -> Column:
-    """Residual overlap predicate for a region over 0-based half-open
-    interval columns (Catalyst pushes it to the scan where possible)."""
-    if region.is_unmapped:
-        return F.col(chrom_col).isNull()
-    cond = F.col(chrom_col) == region.name
-    if region.end is not None:
-        cond = cond & (F.col(start_col) < F.lit(region.end))
-    cond = cond & (F.col(end_col) > F.lit(region.start))
-    return cond

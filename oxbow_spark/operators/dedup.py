@@ -121,12 +121,6 @@ def shingles_of(t, k: int = 3):
     return F.element_at(F.transform(F.array(t), _body), 1)
 
 
-def word_shingles(col, k: int = 3):
-    """Array of k-word shingles (contiguous token windows) of a text column.
-    Convenience form; for hot paths use `shingle_stage` (see `shingles_of`)."""
-    return shingles_of(tokens(col), k)
-
-
 def _py_shingles(s: str | None, k: int) -> list[str]:
     """Python mirror of tokens→shingles (`_shingles_sql` semantics):
     k-token windows joined with ' ', or the single joined-token string
@@ -394,26 +388,6 @@ def lsh_candidate_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
-    )
-
-
-def jaccard_pairs(
-    df: DataFrame, pairs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_k: int = 3, _sh: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for given candidate pairs.
-
-    Joins shingle arrays to the (small) candidate pair set, then computes
-    |A ∩ B| / |A ∪ B| with array intrinsics — no UDF, no explode.
-    """
-    sh = _sh if _sh is not None else shingle_stage(df, text_col, id_col, shingle_k)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
     )
 
 

@@ -24,40 +24,12 @@ from oxbow_spark.operators import decontam, dedup, multimodal, similarity, text
 from oxbow_spark.operators.asof import asof_join
 from oxbow_spark.operators.interval_join import overlap_join
 from oxbow_spark.operators.zoom import exact_sum, zoom_aggregate
-
-
-# Lazy-DataFrame memo for the base-table reads: `spark.read.parquet`
-# pays a py4j round trip plus file listing and a footer/schema read
-# every call, and every bench trial re-reads every table it touches
-# (~0.1 s per read that has nothing to do with the query). The cached
-# object is an UNMATERIALIZED plan — no rows, no results, nothing the
-# "no result caching" rule covers; it is exactly what reusing a temp
-# view across queries would give. Keyed by applicationId so a new
-# session never receives plans bound to a stopped context.
-_READ_CACHE: dict[tuple, DataFrame] = {}
+from oxbow_spark.session import read_parquet, session_stopped
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        mt = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        mt = None  # glob/remote path: let spark.read resolve it
-    key = (spark.sparkContext.applicationId, path, mt)
-    df = _READ_CACHE.get(key)
-    if df is None or mt is None:
-        for stale in [k for k, v in _READ_CACHE.items()
-                      if _session_stopped(v.sparkSession)
-                      # same (app, path) under a different mtime/size: the
-                      # file was regenerated; the old lazy plan can never
-                      # be requested again, so drop it (keeps the memo at
-                      # one live entry per path — VERDICT r15 #7)
-                      or k[:2] == key[:2]]:
-            del _READ_CACHE[stale]
-        df = spark.read.parquet(path)
-        _READ_CACHE[key] = df
-    return df
+    """A base table, through the read memo (`session.read_parquet`)."""
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -591,31 +563,6 @@ SELECT a.event_id AS a_id, b.event_id AS b_id
 FROM iv a JOIN iv b
   ON a.chrom = b.chrom AND a.s < b.e AND b.s < a.e
 WHERE a.event_id % 2 = 0 AND b.event_id % 2 = 1
-"""
-
-
-def event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lead/lag windows (§2.8): per-user inter-event gap + next-event
-    pointer. One shuffle on the partition key; ties broken by event_id
-    for deterministic oracle parity."""
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_id", TS_US().alias("ts_us")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    return ev.select(
-        "user_id",
-        "event_id",
-        (F.col("ts_us") - F.lag("ts_us").over(w)).alias("gap_us"),
-        F.lead("event_id").over(w).alias("next_event_id"),
-    )
-
-
-GAPS_SQL = """
-SELECT user_id, event_id,
-       epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap_us,
-       LEAD(event_id) OVER w AS next_event_id
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
 """
 
 
@@ -1470,10 +1417,6 @@ FROM base
 """
 
 
-def text_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.quality_score(_t(spark, sf_dir, "documents"))
-
-
 TEXT_QUALITY_SQL = rf"""
 WITH s AS (
   SELECT doc_id,
@@ -1495,10 +1438,6 @@ SELECT doc_id, n_tokens,
         AND (sr >= 0.01) AND (pr <= 0.3)) AS passes
 FROM s
 """
-
-
-def lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.lang_id(_t(spark, sf_dir, "documents"))
 
 
 def _langid_sql() -> str:
@@ -1531,15 +1470,6 @@ SELECT doc_id,
        len(list_distinct({TOKS_SQL})) AS n_distinct_tokens
 FROM documents
 """
-
-
-def bpe_token_count_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        text.token_count(F.col("text")).alias("n_ws_tokens"),
-        text.bpe_ish_token_count(F.col("text")).alias("n_bpe_tokens"),
-    )
 
 
 BPE_SQL = rf"""
@@ -2067,20 +1997,10 @@ def _pq_models(spark: SparkSession, sf_dir: str):
         # each other's fits (the memo exists to keep bench rows
         # scan-only).
         for stale in [k for k, v in _PQ_FIT_CACHE.items()
-                      if k != key and _session_stopped(v[3])]:
+                      if k != key and session_stopped(v[3])]:
             del _PQ_FIT_CACHE[stale]
         got = _PQ_FIT_CACHE[key] = (cb, cents, nlist, spark)
     return got[:3]
-
-
-def _session_stopped(sess) -> bool:
-    """True iff the SparkSession's underlying context is stopped (its
-    cached plans are unusable). `SparkContext.stop()` nulls `_jsc`."""
-    try:
-        sc = sess._sc
-        return sc is None or sc._jsc is None
-    except Exception:
-        return True
 
 
 # keyed like _PQ_FIT_CACHE: the persisted cluster-similarity frame the
@@ -2103,7 +2023,7 @@ def _shared_sim_frame(spark: SparkSession, sf_dir: str, variant: str,
         frame = similarity._cluster_sim_frame(
             emb, cents, "embedding", "vec_id", "auto", None).persist()
         for stale in [k for k, v in _SIM_FRAME_CACHE.items()
-                      if k != key and _session_stopped(v[1])]:
+                      if k != key and session_stopped(v[1])]:
             del _SIM_FRAME_CACHE[stale]
         got = _SIM_FRAME_CACHE[key] = (frame, spark)
     frame = got[0]
@@ -2650,25 +2570,6 @@ FROM s GROUP BY user_id, sid
 """
 
 
-def distinct_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation: exact per-type distinct user counts (Catalyst
-    expands to a two-phase partial-distinct aggregate). The approximate
-    path at 100 TB is the same query with approx_count_distinct (HLL,
-    single pass, no distinct shuffle) — not oracle-comparable, so the
-    exact form is the checked one."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-DISTINCT_SQL = """
-SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
-FROM events GROUP BY event_type
-"""
-
-
 def salted_join_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key-safe shuffle join (`operators/skew.py:salted_join`):
     lineitem x supplier on the salted key, aggregated per nation. Result
@@ -2837,10 +2738,6 @@ def _mm_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.attach_fake_payload(_t(spark, sf_dir, "documents"))
 
 
-def mm_sniff_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.sniff_media(_mm_payload(spark, sf_dir))
-
-
 MM_SNIFF_SQL = f"""
 WITH p AS (SELECT doc_id, {_PAYLOAD_SQL} AS payload FROM documents)
 SELECT doc_id, {_SNIFF_SQL_CASE} AS kind,
@@ -2895,13 +2792,6 @@ FROM f
 """
 
 
-def mm_audio_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature plumbing (stub kernel — real WAV decode is
-    `multimodal.decode_wav`, pytest-verified; the oracle models the
-    stub, the same convention as `mm_decode_image_docs`)."""
-    return multimodal.audio_stats(_mm_payload(spark, sf_dir))
-
-
 MM_AUDIO_SQL = f"""
 WITH p AS (SELECT doc_id, {_PAYLOAD_SQL} AS payload FROM documents),
 d AS (
@@ -2917,12 +2807,6 @@ SELECT doc_id, kind,
        ((n * 977) % 1000) / 1000.0 AS rms
 FROM d
 """
-
-
-def mm_video_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video container metadata plumbing (stub kernel — real ISO BMFF
-    parse is `multimodal.decode_mp4`, pytest-verified)."""
-    return multimodal.video_meta(_mm_payload(spark, sf_dir))
 
 
 MM_VIDEO_SQL = f"""

@@ -10,8 +10,8 @@ distribution contract — with a ``.bai`` alongside the file, the BGZF
 stream is cut at linear-index virtual positions pruned to
 ``chunksize`` compressed bytes; each executor seeks its vpos range
 independently (no coordination). With ``regions``, partitions are the
-merged index chunks per region and records are residual-checked
-(`batch_iterator/query.rs:142-159`). Schema and options match the SAM
+merged index chunks per region and records are masked by
+`coords.region_mask`. Schema and options match the SAM
 source (same alignment Model).
 
 Options: ``fields``, ``tags`` ('scan[:N]'), ``tag_defs``, ``coords``,
@@ -27,6 +27,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -314,14 +315,12 @@ def decode_record_batch(
     end_valid = pos_valid & (reflen > 0)
 
     if regions is not None:
-        keep_list = []
-        for i in range(n):
-            rn = ref_names[ref_id[i]] if has_ref[i] else None
-            p = int(pos1[i]) if pos_valid[i] else None
-            e = int(end1[i]) if end_valid[i] else None
-            if _coords.alignment_record_passes(regions, rn, p, e):
-                keep_list.append(i)
-        keep = np.array(keep_list, dtype=np.int64)
+        # end1 (1-based inclusive) is the 0-based exclusive end
+        keep = np.flatnonzero(_coords.region_mask(
+            regions,
+            pc.take(pa.array(ref_names, pa.string()),
+                    pa.array(ref_id, mask=~has_ref)),
+            pa.array(pos0, mask=~pos_valid), pa.array(end1, mask=~end_valid)))
     else:
         keep = np.arange(n)
     if max_rows >= 0:
@@ -414,8 +413,7 @@ class BamPartition(InputPartition):
         self.path = path
         self.vstart = vstart
         self.vend = vend
-        # union residual filter: tuple of (name, start0, end0) / ("*",)
-        # entries (coords.residual_entries), or None for no filter
+        # the merged regions its records are masked by, or None for all
         self.regions = regions
 
 
@@ -449,20 +447,20 @@ class BamReader(DataSourceReader):
                                       first_vpos, size) if index else whole)
                 parts.extend(BamPartition(path, vs, ve) for vs, ve in ranges)
                 continue
-            # every partition residual-checks the whole union, so a record
+            # every partition masks by the whole union, so a record
             # overlapping two (pre-merged) regions is emitted once
-            mapped = [r for r in self.regions if not r.is_unmapped]
+            mapped = tuple(r for r in self.regions if not r.is_unmapped)
             if mapped:
-                resid = _coords.residual_entries(mapped)
                 ranges = (plan_ranges(index, ref_names, mapped, self.chunksize,
                                       first_vpos, size) if index else whole)
-                parts.extend(BamPartition(path, vs, ve, resid) for vs, ve in ranges)
+                parts.extend(BamPartition(path, vs, ve, mapped) for vs, ve in ranges)
             if len(mapped) < len(self.regions):
                 # unmapped section: after the last indexed chunk
                 ends = [ce for ref in index.refs for cs in ref.bins.values()
                         for _, ce in cs] if index else []
                 parts.append(BamPartition(
-                    path, max(ends, default=first_vpos), size << 16, (("*",),)))
+                    path, max(ends, default=first_vpos), size << 16,
+                    (_coords.Region(_coords.UNMAPPED),)))
         # Spark requires ≥1 partition: a region with no index hits yields an
         # empty vpos range (reads nothing but keeps the plan valid)
         return parts or [BamPartition(self.paths[0], 0, 0)]

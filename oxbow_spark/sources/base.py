@@ -14,13 +14,15 @@ Python DataSource API (Spark 4.x):
   `oxbow/src/util/query.rs:137-214`); tabix-indexed BGZF files split at
   index-planned virtual-position ranges (``bgzf.plan_ranges``); other
   gzip files are one partition each;
-- genomic-range predicates (``regions`` option) are applied as residual
-  per-record overlap re-checks (`batch_iterator/query.rs:142-159`);
+- genomic-range predicates (``regions`` option) mask each parsed table
+  with the one vectorized ``coords.region_mask``
+  (`batch_iterator/query.rs:142-159`);
 - rows are emitted as Arrow RecordBatches (columnar, ``batch_size`` rows).
 
 Each concrete format supplies a picklable ``Codec`` with the per-line
-parse, the record's genomic interval accessor, and coordinate-offset
-columns; everything else is shared.
+parse (and optionally a whole-partition ``parse_table``), the records'
+genomic interval columns, and coordinate-offset columns; everything else
+is shared.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ import os
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql import types as T
@@ -67,14 +70,17 @@ class Codec:
     """Picklable per-format parsing state shipped to executors.
 
     Subclasses define:
-    - ``schema``: full StructType (all selected columns, post-projection)
+    - ``schema``: the output StructType (the selected columns) and
+      ``row_schema``: the full row layout the parsers produce, with
+      ``project_indexes`` into it (see :func:`project`)
     - ``parse_line(line) -> list | None`` (None → skip the line)
-    - ``interval(row) -> (chrom, start0, end0) | None`` — 0-based
-      half-open interval for region filtering (None → record passes)
+    - ``table_interval(table)`` when the records' interval is not BED's
+      columns 0..2
     - ``start_field_indexes`` — columns shifted by the coords offset
     """
 
     schema: T.StructType = field(default=None)  # type: ignore[assignment]
+    row_schema: T.StructType = field(default=None)  # type: ignore[assignment]
     coord_offset: int = 0
     start_field_indexes: tuple[int, ...] = ()  # indexes into the FULL row
     coord_col_names: tuple[str, str] | None = None  # (chrom col, start col)
@@ -88,8 +94,23 @@ class Codec:
     def parse_line(self, line: str) -> list | None:  # pragma: no cover
         raise NotImplementedError
 
-    def interval(self, row: list):
-        return None
+    def table_interval(self, table: "pa.Table"):
+        """(chrom, start0, end0) columns of a table of full rows, 0-based
+        half-open in native coordinates, for `coords.region_mask`: BED's
+        layout of columns 0..2 by default."""
+        return table.column(0), table.column(1), table.column(2)
+
+
+def project(row_fields: list[T.StructField], names: list[str]) -> dict:
+    """A codec's ``schema``, ``row_schema`` and ``project_indexes`` for
+    rows laid out as ``row_fields`` and the output columns ``names``."""
+    layout = [f.name for f in row_fields]
+    proj = tuple(layout.index(n) for n in names)
+    return {
+        "schema": T.StructType([row_fields[i] for i in proj]),
+        "row_schema": T.StructType(row_fields),
+        "project_indexes": None if proj == tuple(range(len(layout))) else proj,
+    }
 
 
 class GenomicStreamMixin:
@@ -173,6 +194,7 @@ class TextFormatReader(DataSourceReader):
         ))
         self.index_path = options.get("index")
         self._arrow_schema = to_arrow_schema(codec.schema)
+        self._row_schema = to_arrow_schema(codec.row_schema)
 
     def partitions(self):
         from oxbow_spark.sources.bgzf import is_bgzf, open_index, plan_ranges
@@ -207,32 +229,6 @@ class TextFormatReader(DataSourceReader):
     # is off. PushdownTextFormatReader adds it, and the source factory
     # only instantiates that subclass under an enabled session.
 
-    def _row_passes(self, row: list) -> bool:
-        if not self.regions:
-            return True
-        iv = self.codec.interval(row)
-        if iv is None:
-            return True
-        chrom, s0, e0 = iv
-        for r in self.regions:
-            if r.is_unmapped:
-                if chrom is None:
-                    return True
-                continue
-            if chrom == r.name and r.overlaps(s0, e0 if e0 is not None else s0 + 1):
-                return True
-        return False
-
-    def _emit(self, rows: list[list]) -> pa.RecordBatch:
-        cols = list(zip(*rows)) if rows else [[] for _ in self.codec.schema]
-        arrays = [
-            pa.array(list(c), type=f.type)
-            for c, f in zip(cols, self._arrow_schema)
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=self._arrow_schema)
-
-    # ---- vectorized fast path (codecs may implement parse_table) -------
-
     def _partition_bytes(self, partition: LinePartition) -> bytes:
         """Raw bytes of the lines this partition owns. A vpos partition
         owns the lines that start in its virtual-position range. A byte
@@ -264,75 +260,19 @@ class TextFormatReader(DataSourceReader):
                 data += f.readline()
             return data
 
-    def _emit_fast(self, table: "pa.Table"):
-        """Apply regions / coord offset / projection / limit to a
-        full-column arrow table and emit RecordBatches — the vectorized
-        twin of the per-line loop below (same ordering: residual region
-        check in native coords BEFORE the offset shift)."""
-        import pyarrow.compute as pc
-
+    def _line_tables(self, data: bytes, at_top: bool):
+        """The per-line parse, for codecs without ``parse_table`` or input
+        it hands over: tables of ``batch_size`` full rows in native
+        coordinates, the layout ``parse_table`` returns."""
         codec = self.codec
-        names = table.column_names
-        if self.regions:
-            # (chrom, start0, end0) columns in NATIVE 0-based half-open
-            # coords; codecs whose interval is derived (SAM/VCF) supply
-            # `table_interval`, the default is the BED-style layout of
-            # columns 0..2 with end defaulting to start+1
-            ti = getattr(codec, "table_interval", None)
-            if ti is not None:
-                chrom_c, s0, e0 = ti(table)
-            else:
-                chrom_c, s0 = table[names[0]], table[names[1]]
-                e0 = pc.coalesce(table[names[2]], pc.add(s0, 1))
-            mask = None
-            for r in self.regions:
-                if r.is_unmapped:
-                    m = pc.is_null(chrom_c)
-                else:
-                    m = pc.and_kleene(
-                        pc.equal(chrom_c, r.name),
-                        pc.greater(e0, r.start),
-                    )
-                    if r.end is not None:
-                        m = pc.and_kleene(m, pc.less(s0, r.end))
-                mask = m if mask is None else pc.or_kleene(mask, m)
-            table = table.filter(pc.fill_null(mask, False))
-        if codec.coord_offset:
-            for i in codec.start_field_indexes:
-                nm = names[i]
-                table = table.set_column(
-                    i, nm, pc.add(table[nm], codec.coord_offset)
-                )
-        if codec.project_indexes is not None:
-            table = table.select([names[i] for i in codec.project_indexes])
-        if self.limit >= 0:
-            table = table.slice(0, self.limit)
-        schema = self._arrow_schema
-        total = len(table)
-        if total == 0:
-            return
-        cols = [
-            table[f.name].combine_chunks().cast(f.type) for f in schema
-        ]
-        for lo in range(0, total, self.batch_size):
-            take = min(self.batch_size, total - lo)
-            yield pa.RecordBatch.from_arrays(
-                [c.slice(lo, take) for c in cols], schema=schema
-            )
+        schema = self._row_schema
 
-    def read(self, partition: LinePartition):
-        codec = self.codec
-        data = self._partition_bytes(partition)
-        parse_table = getattr(codec, "parse_table", None)
-        table = parse_table(data) if parse_table is not None else None
-        if table is not None:
-            yield from self._emit_fast(table)
-            return
-        off = codec.coord_offset
-        starts = codec.start_field_indexes
+        def table(rows: list[list]) -> "pa.Table":
+            return pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
+                schema=schema)
+
         rows: list[list] = []
-        n = 0
-        at_top = partition.start <= 0
         for line in data.decode("utf-8").split("\n"):
             if not line:
                 continue
@@ -341,30 +281,57 @@ class TextFormatReader(DataSourceReader):
                     continue
                 at_top = False
             row = codec.parse_line(line)
-            if row is None or not self._row_passes(row):
+            if row is None:
                 continue
-            if off:
-                for i in starts:
-                    if row[i] is not None:
-                        row[i] = row[i] + off
-            if codec.project_indexes is not None:
-                row = [row[i] for i in codec.project_indexes]
             rows.append(row)
-            n += 1
-            if len(rows) >= self.batch_size:
-                yield self._emit(rows)
+            if len(rows) == self.batch_size:
+                yield table(rows)
                 rows = []
-            if 0 <= self.limit <= n:
-                break
         if rows:
-            yield self._emit(rows)
+            yield table(rows)
+
+    def _select(self, table: "pa.Table", limit: int) -> "pa.Table":
+        """Mask a table of full native rows by the regions, then shift its
+        starts, project it and cut it at ``limit`` (< 0: no limit)."""
+        codec = self.codec
+        names = table.column_names
+        if self.regions:
+            table = table.filter(_coords.region_mask(
+                self.regions, *codec.table_interval(table)))
+        if codec.coord_offset:
+            for i in codec.start_field_indexes:
+                table = table.set_column(
+                    i, names[i], pc.add(table[names[i]], codec.coord_offset))
+        if codec.project_indexes is not None:
+            table = table.select(list(codec.project_indexes))
+        return table.slice(0, limit) if limit >= 0 else table
+
+    def read(self, partition: LinePartition):
+        codec = self.codec
+        data = self._partition_bytes(partition)
+        parse_table = getattr(codec, "parse_table", None)
+        table = parse_table(data) if parse_table is not None else None
+        tables = ([table] if table is not None
+                  else self._line_tables(data, partition.start <= 0))
+        schema = self._arrow_schema
+        remaining = self.limit
+        for table in tables:
+            table = self._select(table, remaining)
+            cols = [table[f.name].combine_chunks().cast(f.type) for f in schema]
+            for lo in range(0, len(table), self.batch_size):
+                yield pa.RecordBatch.from_arrays(
+                    [c.slice(lo, self.batch_size) for c in cols], schema=schema)
+            if remaining >= 0:
+                remaining -= len(table)
+                if remaining == 0:
+                    return
 
 
 class PushdownTextFormatReader(TextFormatReader):
     """TextFormatReader + automatic filter→region pushdown for codecs
     that declare their (chrom, start) output columns. Tabix-indexed
-    BGZF inputs prune to index chunks; plain text still short-circuits
-    the residual row check. Only planned on sessions with
+    BGZF inputs prune to index chunks; plain text is still masked by
+    the region. Only planned on sessions with
     spark.sql.python.filterPushdown.enabled (see sources/pushdown.py)."""
 
     def pushFilters(self, filters):

@@ -14,7 +14,8 @@ https://genome.ucsc.edu/goldenPath/help/bigWig.html).
 - option ``zoom=<level>`` on either → the pre-aggregated zoom records
   (chrom, start, end, bases_covered, min, max, sum, sum_squares —
   `bbi/model/zoom.rs:13-44`)
-- option ``regions`` → R-tree-pushed block reads + residual overlap check
+- option ``regions`` → R-tree-pushed block reads, records masked by
+  ``coords.region_mask``
 - partitions: one per group of R-tree leaf blocks (shuffle-less splits)
 
 Coordinates are native 0-based half-open ('01'); ``coords='11'`` shifts
@@ -236,14 +237,6 @@ def decode_bigbed_block(
     return out
 
 
-def decode_zoom_block(data: bytes, endian: str, chroms) -> list[tuple]:
-    out = []
-    for off in range(0, len(data) - 31, 32):
-        cid, s, e_, valid, mn, mx, sm, ssq = struct.unpack_from(endian + "IIIIffff", data, off)
-        out.append((chroms[cid][0], s, e_, valid, mn, mx, sm, ssq))
-    return out
-
-
 # ---- numpy column decoders (the vectorized twins of the tuple decoders
 # above, used by BbiReader._read_np; BigWig/zoom records are fixed-width,
 # so a block decodes as one structured frombuffer view) ----
@@ -363,12 +356,9 @@ _LEAVES_PER_PARTITION = 256
 
 
 class BbiPartition(InputPartition):
-    def __init__(self, path: str, blocks: list[tuple[int, int]],
-                 regions: tuple[tuple[str, int, int], ...] | None):
+    def __init__(self, path: str, blocks: list[tuple[int, int]]):
         self.path = path
         self.blocks = blocks
-        # union residual: tuple of (name, qstart, qend) triples, or None
-        self.regions = regions
 
 
 class BbiReader(DataSourceReader):
@@ -402,10 +392,9 @@ class BbiReader(DataSourceReader):
                     index_off = bbi.full_index_off
                 if self.regions:
                     # pool R-tree leaves across (pre-merged) regions and
-                    # dedupe blocks; each partition residual-checks the
-                    # whole union so a record overlapping two regions — or
-                    # two regions sharing a leaf block — is emitted once
-                    resid = []
+                    # dedupe blocks; each partition masks by the whole
+                    # union so a record overlapping two regions — or two
+                    # regions sharing a leaf block — is emitted once
                     seen: set[tuple[int, int]] = set()
                     leaves = []
                     for reg in self.regions:
@@ -413,22 +402,17 @@ class BbiReader(DataSourceReader):
                             continue
                         cid = bbi.chrom_ids[reg.name]
                         qe = reg.end if reg.end is not None else bbi.chroms[cid][1]
-                        resid.append((reg.name, reg.start, qe))
                         for leaf in bbi.rtree_leaves(index_off, (cid, reg.start, qe)):
                             if leaf not in seen:
                                 seen.add(leaf)
                                 leaves.append(leaf)
-                    for i in range(0, len(leaves), _LEAVES_PER_PARTITION):
-                        parts.append(BbiPartition(
-                            p, leaves[i:i + _LEAVES_PER_PARTITION], tuple(resid),
-                        ))
                 else:
                     leaves = bbi.rtree_leaves(index_off)
-                    for i in range(0, len(leaves), _LEAVES_PER_PARTITION):
-                        parts.append(BbiPartition(p, leaves[i:i + _LEAVES_PER_PARTITION], None))
+                parts.extend(BbiPartition(p, leaves[i:i + _LEAVES_PER_PARTITION])
+                             for i in range(0, len(leaves), _LEAVES_PER_PARTITION))
             finally:
                 bbi.close()
-        return parts or [BbiPartition(self.paths[0], [], None)]
+        return parts or [BbiPartition(self.paths[0], [])]
 
     def read(self, part: BbiPartition):
         bbi = BbiFile(part.path)
@@ -442,27 +426,23 @@ class BbiReader(DataSourceReader):
             if batch is not None:
                 yield batch
                 return
-            tags = self.asql_tags
-
-            def decode(data, endian, chroms):
-                return decode_bigbed_block(data, endian, chroms, tags)
-
+            recs = []
+            for doff, dsize in part.blocks:
+                bbi.f.seek(doff)
+                recs += decode_bigbed_block(bbi.decompress(bbi.f.read(dsize)),
+                                            bbi.endian, bbi.chroms, self.asql_tags)
+            if self.regions:
+                keep = _coords.region_mask(self.regions, *(
+                    [rec[i] for rec in recs] for i in range(3)))
+                recs = [rec for rec, k in zip(recs, keep) if k]
             rows = []
             proj = [self._full_names.index(n) for n in self.names]
             identity = proj == list(range(len(self._full_names)))
-            for doff, dsize in part.blocks:
-                bbi.f.seek(doff)
-                data = bbi.decompress(bbi.f.read(dsize))
-                for rec in decode(data, bbi.endian, bbi.chroms):
-                    if part.regions is not None and not any(
-                        rec[0] == nm and rec[1] < qe and rec[2] > qs
-                        for nm, qs, qe in part.regions
-                    ):
-                        continue
-                    row = list(rec)
-                    if self.coord_offset:
-                        row[1] += self.coord_offset
-                    rows.append(row if identity else [row[i] for i in proj])
+            for rec in recs:
+                row = list(rec)
+                if self.coord_offset:
+                    row[1] += self.coord_offset
+                rows.append(row if identity else [row[i] for i in proj])
             cols = list(zip(*rows)) if rows else [[] for _ in self._arrow_schema]
             arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, self._arrow_schema)]
             yield pa.RecordBatch.from_arrays(arrays, schema=self._arrow_schema)
@@ -505,10 +485,8 @@ class BbiReader(DataSourceReader):
                 rest_len = np.zeros(0, np.int64)
             names_c, s_c, e_c = cols
             mask = None
-            if part.regions is not None:
-                mask = np.zeros(len(s_c), dtype=bool)
-                for nm, qs, qe in part.regions:
-                    mask |= (names_c == nm) & (s_c < qe) & (e_c > qs)
+            if self.regions:
+                mask = _coords.region_mask(self.regions, names_c, s_c, e_c)
                 cols = [c[mask] for c in cols]
             if self.coord_offset:
                 cols[1] = cols[1] + self.coord_offset
@@ -608,10 +586,8 @@ class BbiReader(DataSourceReader):
             rest_len = np.zeros(0, np.int64)
         names_c, s_c, e_c = cols[0], cols[1], cols[2]
         mask = None
-        if part.regions is not None:
-            mask = np.zeros(len(s_c), dtype=bool)
-            for nm, qs, qe in part.regions:
-                mask |= (names_c == nm) & (s_c < qe) & (e_c > qs)
+        if self.regions:
+            mask = _coords.region_mask(self.regions, names_c, s_c, e_c)
             cols = [c[mask] for c in cols]
             s_c = cols[1]
         if self.coord_offset:

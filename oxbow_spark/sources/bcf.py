@@ -33,6 +33,7 @@ import pyarrow.compute as pc
 from pyspark.sql.datasource import DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from oxbow_spark import coords as _coords
 from oxbow_spark.models.vcf_header import VcfHeader
 from oxbow_spark.sources.bam import _gather_ranges, _utf8_array
 from oxbow_spark.sources.base import DEFAULT_BATCH_SIZE
@@ -368,14 +369,8 @@ def decode_bcf_batch(
     for i in np.flatnonzero(chrom_id >= len(contigs)):
         chrom_col[i] = str(int(chrom_id[i]))
     if regions:
-        p0 = pos1 - 1
-        e0 = p0 + a_len[0]
-        hit = np.zeros(n, dtype=bool)
-        for reg in regions:
-            if not reg.is_unmapped:
-                m = (chrom_col == reg.name) & (e0 > reg.start)
-                hit |= m if reg.end is None else m & (p0 < reg.end)
-        keep = np.flatnonzero(hit)
+        keep = np.flatnonzero(_coords.region_mask(
+            regions, chrom_col, pos1 - 1, pos1 - 1 + a_len[0]))
     else:
         keep = np.arange(n)
     if max_rows >= 0:
@@ -545,8 +540,6 @@ DEFAULT_BCF_CHUNKSIZE = 16 * 1024 * 1024
 class BcfReader(DataSourceReader):
     def __init__(self, src: "BcfDataSource"):
         self.paths = src.paths
-        from oxbow_spark import coords as _coords
-
         self.codec: VcfCodec = src.codec()
         self.batch_size = int(src.options.get("batch_size", DEFAULT_BATCH_SIZE))
         self.limit = int(src.options.get("limit", -1))

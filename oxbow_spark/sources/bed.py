@@ -7,8 +7,8 @@ grammar `bed/model/schema.rs:66-215`, SURVEY S8). Options:
   (default ``bed6``; bare ``bed`` ≡ bed6 as in the reference)
 - ``fields``: comma list projecting columns (Select::Some; unknown → error)
 - ``coords``: '01' (native) | '11' — shifts ``start``/``thickStart`` by +1
-- ``regions``: ';'-separated region strings (UCSC/bracket); residual
-  overlap filter per record
+- ``regions``: ';'-separated region strings (UCSC/bracket); records are
+  masked by ``coords.region_mask``
 - ``batch_size``, ``limit``, ``partition_bytes``
 """
 
@@ -18,9 +18,10 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from oxbow_spark.models.bed_schema import STANDARD_FIELD_NAMES, BedSchema
-from oxbow_spark.sources.base import Codec, TextFormatSource, select_fields
+from oxbow_spark.sources.base import Codec, TextFormatSource, project, select_fields
 
 _META = ("#", "track", "browser")
 _META_B = (b"#", b"track", b"browser")
@@ -56,10 +57,6 @@ class BedCodec(Codec):
     def parse_line(self, line: str) -> list | None:
         return self.bed_schema.parse_line(line)
 
-    def interval(self, row: list):
-        # full-row layout: chrom, start, end are always fields 0..2
-        return (row[0], row[1], row[2])
-
     def parse_table(self, data: bytes) -> "pa.Table | None":
         """Vectorized partition parse: pyarrow.csv (C++ TSV reader) +
         arrow compute kernels for the typed columns — no Python per line.
@@ -75,7 +72,7 @@ class BedCodec(Codec):
         names = bs.field_names
         data = _excise_meta(data)
         if not data:
-            return pa.table({nm: pa.array([], pa.string()) for nm in names})
+            return to_arrow_schema(self.row_schema).empty_table()
         try:
             raw = pacsv.read_csv(
                 pa.BufferReader(data),
@@ -129,17 +126,13 @@ class BedDataSource(TextFormatSource):
 
     def _codec(self) -> BedCodec:
         bs = BedSchema.parse(self.options.get("bed_schema", "bed6"))
-        full = bs.to_struct()
         names = select_fields(bs.field_names, self.options.get("fields"))
-        proj = tuple(bs.field_names.index(n) for n in names)
-        schema = T.StructType([full[n] for n in names])
         start_idx = tuple(
             i for i, nm in enumerate(bs.field_names) if nm in ("start", "thickStart")
         )
         return BedCodec(
-            schema=schema,
+            **project(bs.to_struct().fields, names),
             bed_schema=bs,
-            project_indexes=None if list(proj) == list(range(len(bs.field_names))) else proj,
             start_field_indexes=start_idx,
             coord_col_names=("chrom", "start"),
             meta_anywhere=True,

@@ -17,7 +17,7 @@ headers only (cheap driver-side scan: read 4-byte length + header varints,
 seek past the body) and emits one InputPartition per data container; each
 executor re-opens the file and decodes only its containers. Region queries
 prune partitions by the container header's (ref, start, span) before any
-block is read, with the residual overlap re-check applied per record
+block is read, with its records masked by `coords.region_mask`
 (SURVEY F1).
 
 Options: ``fields``, ``coords``, ``regions``, ``tags`` ('scan' reads the tag
@@ -36,6 +36,7 @@ import struct
 import zlib
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -65,36 +66,9 @@ _STD_ARROW = to_arrow_schema(
     T.StructType([T.StructField(n, t) for n, t in STANDARD_FIELDS]))
 
 
-def _arrow_region_filter(batch, entries):
-    """Vectorized twin of `coords.alignment_record_passes` over a
-    standard-layout batch: union of region entries, each record checked
-    once."""
-    from pyarrow import compute as pc
-
-    rname = batch.column(2)
-    pos = batch.column(3)
-    end = batch.column(11)
-    mask = None
-    for e in entries:
-        if e[0] == "*":
-            m = pc.is_null(rname)
-        else:
-            nm, s0, e0 = e
-            m = pc.and_(pc.equal(rname, nm), pc.is_valid(pos))
-            rec_end = pc.coalesce(end, pos)
-            if e0 is not None:
-                m = pc.and_(m, pc.less(pos, pa.scalar(e0 + 1, pos.type)))
-            m = pc.and_(m, pc.greater(rec_end, pa.scalar(s0, pos.type)))
-        m = pc.fill_null(m, False)
-        mask = m if mask is None else pc.or_(mask, m)
-    return batch.filter(mask)
-
-
 def _arrow_shift(batch, col_idx, offset):
     """Add ``offset`` to the given integer columns, nulls preserved,
     type kept."""
-    from pyarrow import compute as pc
-
     cols = list(batch.columns)
     for i in col_idx:
         cols[i] = pc.add(cols[i], pa.scalar(offset, cols[i].type))
@@ -1729,7 +1703,6 @@ class SliceDecoder:
         caller falls back to the row loop, so fast ≡ slow by
         construction."""
         import numpy as np
-        from pyarrow import compute as pc
 
         cigars, text, seq_off, ends = vec
         try:
@@ -2075,8 +2048,8 @@ class CramPartition(InputPartition):
     def __init__(self, path: str, offset: int, regions: tuple | None = None):
         self.path = path
         self.offset = offset
-        # union residual filter: tuple of (name, start0, end0) / ("*",)
-        # entries (coords.residual_entries), or None for no filter
+        # the merged regions its container can hold records of, which its
+        # records are masked by; None without a region query
         self.regions = regions
 
 
@@ -2108,7 +2081,7 @@ class CramReader(DataSourceReader):
                 r for r in self.regions
                 if not r.is_unmapped and r.name in ref_names
             ]
-            resid = _coords.residual_entries(mapped)
+            unmapped = _coords.Region(_coords.UNMAPPED)
             # planner input: the .crai index when present (one small gzip
             # read) — else a container-header walk, O(#containers) driver
             # seeks (tens of thousands on a 100 GB CRAM)
@@ -2119,16 +2092,16 @@ class CramReader(DataSourceReader):
                     if not self.regions:
                         parts.append(CramPartition(path, off))
                         continue
-                    entries: list[tuple] = []
+                    entries: list[_coords.Region] = []
                     for seq_id, s_start, s_span in slices:
                         if seq_id == -1:
-                            if want_unmapped and ("*",) not in entries:
-                                entries.append(("*",))
+                            if want_unmapped and unmapped not in entries:
+                                entries.append(unmapped)
                             continue
                         if seq_id < -1:
                             # defensive: unknown negative id → no pruning
-                            entries = list(resid) + (
-                                [("*",)] if want_unmapped else []
+                            entries = mapped + (
+                                [unmapped] if want_unmapped else []
                             )
                             break
                         s_lo, s_hi = s_start - 1, s_start - 1 + s_span
@@ -2139,9 +2112,8 @@ class CramReader(DataSourceReader):
                                 continue
                             if s_span > 0 and s_hi <= reg.start:
                                 continue
-                            e = (reg.name, reg.start, reg.end)
-                            if e not in entries:
-                                entries.append(e)
+                            if reg not in entries:
+                                entries.append(reg)
                     if entries:
                         parts.append(CramPartition(path, off, tuple(entries)))
                 continue
@@ -2150,14 +2122,14 @@ class CramReader(DataSourceReader):
                     parts.append(CramPartition(path, off))
                     continue
                 # container-level pruning on (ref, start, span); at most ONE
-                # partition per container, residual-checked against the
+                # partition per container, masked by the
                 # union of merged regions, so a record overlapping two
                 # regions is emitted exactly once
                 if ref_id == -1:
                     if want_unmapped:
-                        parts.append(CramPartition(path, off, (("*",),)))
+                        parts.append(CramPartition(path, off, (unmapped,)))
                     continue
-                entries = list(resid) if ref_id == -2 else []
+                entries = list(mapped) if ref_id == -2 else []
                 if ref_id >= 0:
                     for reg in mapped:
                         if ref_id != ref_names.index(reg.name):
@@ -2167,9 +2139,9 @@ class CramReader(DataSourceReader):
                             continue
                         if span > 0 and c_hi <= reg.start:
                             continue
-                        entries.append((reg.name, reg.start, reg.end))
+                        entries.append(reg)
                 if want_unmapped and ref_id == -2:
-                    entries.append(("*",))  # multiref slices may hold unmapped
+                    entries.append(unmapped)  # multiref slices may hold unmapped
                 if entries:
                     parts.append(CramPartition(path, off, tuple(entries)))
         return parts or [CramPartition(self.paths[0], -1)]
@@ -2213,7 +2185,9 @@ class CramReader(DataSourceReader):
                     rows = []
                 batch = out_any
                 if part.regions is not None:
-                    batch = _arrow_region_filter(batch, part.regions)
+                    batch = batch.filter(_coords.region_mask(
+                        part.regions, batch.column(2),
+                        pc.subtract(batch.column(3), 1), batch.column(11)))
                 if self.coord_offset:
                     batch = _arrow_shift(batch, (3, 7), self.coord_offset)
                 if 0 <= self.limit:
@@ -2227,11 +2201,13 @@ class CramReader(DataSourceReader):
                 if 0 <= self.limit <= n:
                     break
                 continue
+            if part.regions is not None:
+                keep = _coords.region_mask(
+                    part.regions, [row[2] for row, _ in out_any],
+                    [None if row[3] is None else row[3] - 1 for row, _ in out_any],
+                    [row[11] for row, _ in out_any])
+                out_any = [rt for rt, k in zip(out_any, keep) if k]
             for row, tags in out_any:
-                if part.regions is not None and not _coords.alignment_record_passes(
-                    part.regions, row[2], row[3], row[11]
-                ):
-                    continue
                 if self.coord_offset:
                     for i in (3, 7):
                         if row[i] is not None:

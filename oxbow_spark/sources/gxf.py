@@ -29,7 +29,13 @@ from oxbow_spark.models.gxf import (
     parse_attributes,
     scan_attribute_defs,
 )
-from oxbow_spark.sources.base import Codec, TextFormatSource, open_text, select_fields
+from oxbow_spark.sources.base import (
+    Codec,
+    TextFormatSource,
+    open_text,
+    project,
+    select_fields,
+)
 
 
 def _parse_std(cols: list[str]) -> list:
@@ -67,9 +73,6 @@ class GxfCodec(Codec):
                 for d in self.attr_defs
             })
         return row
-
-    def interval(self, row: list):
-        return (row[0], row[3] - 1, row[4])
 
     def table_interval(self, table: "pa.Table"):
         import pyarrow.compute as pc
@@ -169,20 +172,16 @@ class _GxfSource(TextFormatSource):
 
     def _codec(self) -> GxfCodec:
         names = select_fields(STANDARD_FIELD_NAMES, self.options.get("fields"))
-        fields = [T.StructField(nm, dict(STANDARD_FIELDS)[nm], True) for nm in names]
+        row = [T.StructField(nm, t, True) for nm, t in STANDARD_FIELDS]
         defs = self._attr_defs()
-        layout = list(STANDARD_FIELD_NAMES)
         if defs is not None:
-            fields.append(T.StructField("attributes", attributes_struct(defs), True))
-            layout.append("attributes")
+            row.append(T.StructField("attributes", attributes_struct(defs), True))
             names = names + ["attributes"]
-        proj = tuple(layout.index(n) for n in names)
         return GxfCodec(
-            schema=T.StructType(fields),
+            **project(row, names),
             flavor=self.FLAVOR,
             attr_defs=tuple(defs or ()),
             with_attrs=defs is not None,
-            project_indexes=None if list(proj) == list(range(len(layout))) else proj,
             start_field_indexes=(3,),
             coord_col_names=("seqid", "start"),
             meta_anywhere=True,

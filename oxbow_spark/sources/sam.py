@@ -35,7 +35,13 @@ from oxbow_spark.models.sam_header import (
     split_sam_tag,
     tags_struct,
 )
-from oxbow_spark.sources.base import Codec, TextFormatSource, open_text, select_fields
+from oxbow_spark.sources.base import (
+    Codec,
+    TextFormatSource,
+    open_text,
+    project,
+    select_fields,
+)
 
 
 @dataclass
@@ -80,24 +86,13 @@ class SamCodec(Codec):
             })
         return row
 
-    def interval(self, row: list):
-        if row[2] is None or row[3] is None:
-            return (None, 0, None)  # unmapped — matched only by region '*'
-        end = row[11] if row[11] is not None else row[3]
-        return (row[2], row[3] - 1, end)
-
     def table_interval(self, table: "pa.Table"):
-        """(chrom, start0, end0) for the vectorized region mask: rname is
-        null for unmapped (matched only by region '*'); end0 = the
-        1-based inclusive `end` (≡ 0-based exclusive), falling back to a
-        1-base span at pos."""
+        """(chrom, start0, end0) for the region mask: rname is null for
+        unmapped (matched only by region '*'); end0 is the 1-based
+        inclusive `end` (≡ 0-based exclusive)."""
         import pyarrow.compute as pc
 
-        return (
-            table["rname"],
-            pc.subtract(table["pos"], 1),
-            pc.coalesce(table["end"], table["pos"]),
-        )
+        return table["rname"], pc.subtract(table["pos"], 1), table["end"]
 
     def parse_table(self, data: bytes) -> "pa.Table | None":
         """Vectorized partition parse: the whole partition reads as one
@@ -286,19 +281,15 @@ class SamDataSource(TextFormatSource):
 
     def _codec(self) -> SamCodec:
         names = select_fields(STANDARD_FIELD_NAMES, self.options.get("fields"))
-        fields = [T.StructField(nm, dict(STANDARD_FIELDS)[nm], True) for nm in names]
+        row = [T.StructField(nm, t, True) for nm, t in STANDARD_FIELDS]
         defs = self._tag_defs()
-        layout = list(STANDARD_FIELD_NAMES)
         if defs is not None:
-            fields.append(T.StructField("tags", tags_struct(defs), True))
-            layout.append("tags")
+            row.append(T.StructField("tags", tags_struct(defs), True))
             names = names + ["tags"]
-        proj = tuple(layout.index(n) for n in names)
         return SamCodec(
-            schema=T.StructType(fields),
+            **project(row, names),
             tag_defs=tuple(defs or ()),
             with_tags=defs is not None,
-            project_indexes=None if list(proj) == list(range(len(layout))) else proj,
             start_field_indexes=(3, 7),  # pos, pnext
             coord_col_names=("rname", "pos"),
             meta_anywhere=False,

@@ -38,7 +38,13 @@ from oxbow_spark.models.vcf_header import (
     parse_gt,
     parse_id,
 )
-from oxbow_spark.sources.base import Codec, TextFormatSource, open_text, select_fields
+from oxbow_spark.sources.base import (
+    Codec,
+    TextFormatSource,
+    open_text,
+    project,
+    select_fields,
+)
 
 
 @dataclass
@@ -89,12 +95,9 @@ class VcfCodec(Codec):
                 row.extend(cols)
         return row
 
-    def interval(self, row: list):
-        return (row[0], row[1] - 1, row[1] - 1 + len(row[3]))
-
     def table_interval(self, table: "pa.Table"):
-        """(chrom, start0, end0) for the vectorized region mask: pos is
-        1-based in the parsed layout, end spans the REF allele."""
+        """(chrom, start0, end0) for the region mask: pos is 1-based in
+        the parsed layout, end spans the REF allele."""
         import pyarrow.compute as pc
 
         s0 = pc.subtract(table["pos"], 1)
@@ -504,13 +507,11 @@ class VcfDataSource(TextFormatSource):
     def _codec(self) -> VcfCodec:
         hdr = self.header()
         names = select_fields(STANDARD_FIELD_NAMES, self.options.get("fields"))
-        fields = [T.StructField(nm, dict(STANDARD_FIELDS)[nm], True) for nm in names]
-        layout = list(STANDARD_FIELD_NAMES)
+        row = [T.StructField(nm, t, True) for nm, t in STANDARD_FIELDS]
 
         info_names = self._subset(hdr.infos, self.options.get("info_fields"))
         if info_names is not None:
-            fields.append(T.StructField("info", hdr.info_struct(info_names), True))
-            layout.append("info")
+            row.append(T.StructField("info", hdr.info_struct(info_names), True))
             names = names + ["info"]
 
         gt_names = self._subset(hdr.formats, self.options.get("genotype_fields"))
@@ -541,26 +542,22 @@ class VcfDataSource(TextFormatSource):
                     for d in gdefs
                 ]
             if nested:
-                fields.append(T.StructField("samples", T.StructType(gcols), True))
-                layout.append("samples")
+                row.append(T.StructField("samples", T.StructType(gcols), True))
                 names = names + ["samples"]
             else:
-                fields.extend(gcols)
-                layout.extend(f.name for f in gcols)
+                row.extend(gcols)
                 names = names + [f.name for f in gcols]
         else:
             gt_names = None
 
-        proj = tuple(layout.index(n) for n in names)
         return VcfCodec(
-            schema=T.StructType(fields),
+            **project(row, names),
             header=hdr,
             info_names=tuple(info_names) if info_names is not None else None,
             gt_names=tuple(gt_names) if gt_names is not None else None,
             samples=samples,
             genotype_by=genotype_by,
             samples_nested=nested,
-            project_indexes=None if list(proj) == list(range(len(layout))) else proj,
             start_field_indexes=(1,),
             coord_col_names=("chrom", "pos"),
             meta_anywhere=False,

@@ -9,7 +9,7 @@ import gzip
 import pytest
 
 from oxbow_spark.sources.bed import BedCodec, BedDataSource
-from tests.corpus import fixtures_dir, needs_checkout
+from tests.corpus import fixtures_dir, generated_dir, needs_checkout
 
 FIX = fixtures_dir()
 
@@ -128,3 +128,13 @@ def test_ragged_extra_columns_fall_back(tmp_path):
     p.write_text("chr1\t0\t10\tn\t0\t+\tEXTRA\nchr1\t5\t15\tm\t0\t-\n")
     rows = _collect(BedDataSource({"path": str(p), "bed_schema": "bed6"}))
     assert len(rows) == 2
+
+
+def test_indexed_region_without_hits_reads_no_rows():
+    """A BED.gz region that the tabix index does not hit plans one empty
+    partition; its empty parse must read as no rows for every schema and
+    coordinate system, as the line loop does."""
+    path = f"{generated_dir()}/sample.bed.gz"
+    for opts in ({}, {"coords": "11"}, {"bed_schema": "bed9+2"}):
+        ds = BedDataSource({"path": path, "regions": "chrX:1-10", **opts})
+        assert _collect(ds) == [] == _collect(ds, slow=True), opts

@@ -683,8 +683,9 @@ def test_sql_string_builders_match_column_builders(spark, sf):
 def test_read_memo_bounded_on_regeneration(spark, sf, tmp_path):
     """VERDICT r15 #7: regenerating a file N times must leave at most ONE
     live memo entry per path — same-(app, path) keys with a stale
-    mtime/size are evicted on insert in both `registry._t` and
-    `session._read_events_raw` (the memo is a dict of lazy plans; without
+    mtime/size are evicted on insert into the one read memo
+    (`session.read_parquet`), through both `registry._t` and
+    `session.read_events` (the memo is a dict of lazy plans; without
     eviction it grows unboundedly for a long-lived session that rewrites
     its inputs)."""
     import os
@@ -699,14 +700,14 @@ def test_read_memo_bounded_on_regeneration(spark, sf, tmp_path):
         shutil.copy(os.path.join(sf, "region.parquet"), dst)
         os.utime(dst, ns=(1_000_000_000 * (i + 1),) * 2)
         R._t(spark, work, "region")
-    assert len([k for k in R._READ_CACHE if k[1] == dst]) == 1
+    assert len([k for k in sess._READ_CACHE if k[1] == dst]) == 1
 
     edst = os.path.join(work, "events.parquet")
     for i in range(4):
         shutil.copy(os.path.join(sf, "events.parquet"), edst)
         os.utime(edst, ns=(1_000_000_000 * (i + 1),) * 2)
-        sess._read_events_raw(spark, edst)
-    assert len([k for k in sess._EVENTS_READ_CACHE if k[1] == edst]) == 1
+        sess.read_events(spark, work)
+    assert len([k for k in sess._READ_CACHE if k[1] == edst]) == 1
 
 
 def test_bm25_scale_conditional_persist(spark, sf):

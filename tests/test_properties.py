@@ -10,7 +10,9 @@ import random
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from oxbow_spark.coords import Region, start_offset
+import pyarrow as pa
+
+from oxbow_spark.coords import Region, merge_regions, region_mask, start_offset
 from oxbow_spark.sources.cram import rans4x8_decode
 from tests.test_cram import _rans0_encode
 
@@ -62,6 +64,45 @@ def test_region_overlap_is_interval_intersection(name, s1, l1, s2, l2):
     got = r.overlaps(s2, s2 + l2)
     expect = max(s1, s2) < min(s1 + l1, s2 + l2)
     assert got == expect
+
+
+QUERY_REGIONS = st.lists(st.one_of(
+    st.just(Region("*")),
+    st.builds(lambda name, s, length: Region(name, s, None if length is None else s + length),
+              st.sampled_from(["chr1", "chr2"]), st.integers(0, 300),
+              st.none() | st.integers(0, 200)),
+), max_size=4)
+RECORDS = st.lists(st.tuples(
+    st.sampled_from(["chr1", "chr2", "chr3", None]),
+    st.none() | st.integers(0, 400), st.none() | st.integers(0, 400)),
+    max_size=30)
+
+
+@settings(deadline=None)
+@given(QUERY_REGIONS, RECORDS, st.booleans())
+def test_region_mask_matches_scalar_overlaps(regions, records, arrow):
+    """`region_mask` ≡ the scalar rule record by record: a null chrom
+    matches only '*', a null start no named region, a null end means
+    start + 1, and the union is the same merged or not."""
+    def scalar(chrom, s0, e0):
+        if chrom is None:
+            return any(r.is_unmapped for r in regions)
+        return s0 is not None and any(
+            r.name == chrom and r.overlaps(s0, s0 + 1 if e0 is None else e0)
+            for r in regions)
+
+    cols = [[rec[i] for rec in records] for i in range(3)]
+    if arrow:
+        cols = [pa.array(cols[0], pa.string()),
+                pa.array(cols[1], pa.int32()), pa.array(cols[2], pa.int32())]
+    expect = [scalar(*rec) for rec in records]
+    assert region_mask(regions, *cols).tolist() == expect
+    assert region_mask(merge_regions(regions), *cols).tolist() == expect
+
+
+def test_region_mask_empty_batch():
+    assert region_mask([Region("chr1"), Region("*")], [], [], []).tolist() == []
+    assert region_mask([], ["chr1"], [0], [None]).tolist() == [False]
 
 
 @settings(max_examples=30, deadline=None)

@@ -74,6 +74,19 @@ def test_vcf_region_fast_equals_slow():
     assert len(fast) > 0
 
 
+def test_sam_star_region_selects_only_unplaced_rname(tmp_path):
+    """'*' selects the records whose RNAME is '*', with or without tags
+    (the tag scan takes the line loop): a record with an RNAME and POS 0
+    is not one of them."""
+    p = tmp_path / "star.sam"
+    p.write_text("@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:1000\n"
+                 "r1\t4\tchr1\t0\t0\t*\t*\t0\t0\tACGT\tIIII\tNM:i:0\n"
+                 "r2\t4\t*\t0\t0\t*\t*\t0\t0\tACGT\tIIII\tNM:i:1\n")
+    for opts in ({}, {"tags": "scan"}):
+        ds = SamDataSource({"path": str(p), "regions": "*", **opts})
+        assert [row[0] for row in _collect(ds)] == ["r2"], opts
+
+
 def test_sam_fast_path_engages():
     ds = SamDataSource({"path": SAM})
     reader = ds.reader(ds.schema())
